@@ -30,6 +30,7 @@ from .dedup import (
     shingle_frame,
     wide_docs,
 )
+from .ranking import track_cache
 
 _docs = wide_docs
 
@@ -120,8 +121,8 @@ def x_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (x_quantile_sample's deterministic md5-bucket pattern).
     """
     docs = _docs(spark, sf_dir)
-    shset = shingle_frame(docs, "doc_id", "text").persist()
-    exploded = shset.select("id", F.explode("sh").alias("g")).persist()
+    shset = track_cache(shingle_frame(docs, "doc_id", "text"))
+    exploded = track_cache(shset.select("id", F.explode("sh").alias("g")))
     rare = (
         exploded.groupBy("g")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -131,21 +132,20 @@ def x_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = exploded.join(rare, "g")
     tpairs = candidate_pairs(filtered, ["g"], "id")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    truth = (
+    # round 14: two consumers (n_truth and the hit join) — without the
+    # persist the array-intersect exact-verify arm runs twice (AQE reuses
+    # the identical upstream exchange, but the post-exchange verify work
+    # is per-consumer)
+    truth = track_cache(
         tpairs.join(shset.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(shset.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .filter(inter * 5 >= (F.size("sh_a") + F.size("sh_b") - inter) * 3)
         .select("id_a", "id_b")
-        # round 14: two consumers (n_truth and the hit join) — without
-        # the persist the array-intersect exact-verify arm runs twice
-        # (AQE reuses the identical upstream exchange, but the
-        # post-exchange verify work is per-consumer)
-        .persist()
     )
     bands = md5_band_frame(shset)
-    cand = candidate_pairs(
+    cand = track_cache(candidate_pairs(
         bands, ["band_id", "band_hash"], "id", cap=MAX_BAND_FREQ, cap_style="window"
-    ).persist()
+    ))
     hit = cand.join(truth, ["id_a", "id_b"])
     n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     n_cand = cand.agg(F.count(F.lit(1)).alias("n_cand"))
@@ -316,8 +316,8 @@ def x_lsh_curve_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
     full corpus scale the harness runs on a deterministic hash-sampled
     slice like x_dedup_recall."""
     docs = _docs(spark, sf_dir)
-    shset = shingle_frame(docs, "doc_id", "text").persist()
-    exploded = shset.select("id", F.explode("sh").alias("g")).persist()
+    shset = track_cache(shingle_frame(docs, "doc_id", "text"))
+    exploded = track_cache(shset.select("id", F.explode("sh").alias("g")))
     rare = (
         exploded.groupBy("g")
         .agg(F.count(F.lit(1)).alias("freq"))

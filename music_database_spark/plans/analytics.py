@@ -1756,11 +1756,8 @@ def x_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
     )
     # Three independent exact global ranks over the per-customer frame,
-    # each bucketed-parallel (DESC recency becomes ASC on its negation):
-    # one shared persisted frame, slim 2-column rank pipelines with the
-    # count hoisted, rank columns equi-joined back on the entity key —
-    # at scale these are co-partitioned custkey joins of (id, rank)
-    # frames, never a wide intermediate per rank.
+    # each bucketed-parallel (DESC recency becomes ASC on its negation),
+    # chained over one shared persisted frame (see the chaining note below).
     rfm_c = track_cache(rfm)
     nb = effective_buckets(rfm_c)
     # ONE shared bounded sample (all three dimensions' key columns, no

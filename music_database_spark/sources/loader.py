@@ -14,6 +14,7 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 DRIVER_TABLES = [
     "region",
@@ -29,10 +30,6 @@ DRIVER_TABLES = [
 ]
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# events.ts physical-type probe cache, keyed by (sf_dir, file mtime) so a
-# regenerated testdata drop re-probes (see load_table)
-_EVENTS_TS_TYPE: dict[tuple[str, float], str] = {}
 
 # SparkContexts that already ship the package to their workers, keyed by
 # applicationId: unique per context, unlike id(sc), which CPython can
@@ -78,10 +75,41 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     _PYFILES_ADDED.add(app_id)
 
 
+# table_schema's memo: inference is one Spark job per read (~0.1 s), and
+# every plan build reads its tables again
+_SCHEMAS: dict[tuple[str, str, str], StructType] = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema Spark infers for ``{sf_dir}/{name}.parquet``, memoized
+    (key and invalidation: see load_table).
+
+    For events this also sets the ``nanosAsLong`` legacy conf, which the
+    inference and every later read of the table need; its ``ts`` field
+    type tells the testdata generation apart."""
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        # Runtime SQL conf; only affects NANOS-annotated INT64 columns, so
+        # the millisecond timestamps in orders/lineitem are untouched.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = (spark.sparkContext.applicationId, path, source_content_tag(sf_dir, [name]))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one table. Filters/projections applied downstream
     are pushed into this scan by Catalyst (verify via .explain: PushedFilters,
     ReadSchema).
+
+    The reader gets the table's schema from ``table_schema``, so only the
+    first call per session and file version starts a schema-inference
+    job. The memo is keyed by the SparkContext's applicationId, the
+    parquet path and ``source_content_tag(sf_dir, [name])`` (the file's
+    name, size and mtime_ns): a new session, or a file that is rewritten
+    or replaced, is inferred again.
 
     The events table stores ts as parquet TIMESTAMP(NANOS), which Spark's
     vectorized reader rejects outright. We read it under the
@@ -117,37 +145,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "session conf pinning failed (oracle comparisons may flake): %s", e
         )
     ensure_worker_imports(spark)
+    schema = table_schema(spark, sf_dir, name)
+    raw = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # Runtime SQL conf; only affects NANOS-annotated INT64 columns, so
-        # the millisecond timestamps in orders/lineitem are untouched.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         # Driver testdata generations differ: events.ts has shipped both as
         # INT64 epoch-nanos (read as long under nanosAsLong) and as plain
         # parquet timestamp[us] (read as TIMESTAMP_NTZ). Normalize either to
         # session-zone TIMESTAMP (session tz is pinned UTC above, so NTZ →
         # LTZ is the identity wall-clock mapping DuckDB's oracle also uses).
-        # The dtype probe is a py4j round-trip; cache it per sf_dir so the
-        # many events queries don't each pay it at plan-build time. Keyed
-        # on the parquet file's mtime too, so a regenerated testdata drop
-        # that flips the ts encoding mid-process re-probes instead of
-        # applying the other generation's normalization.
-        try:
-            mtime = os.path.getmtime(f"{sf_dir}/{name}.parquet")
-        except OSError:
-            mtime = -1.0
-        cache_key = (sf_dir, mtime)
-        ts_type = _EVENTS_TS_TYPE.get(cache_key)
-        if ts_type is None:
-            ts_type = _EVENTS_TS_TYPE[cache_key] = dict(raw.dtypes)["ts"]
-        if ts_type == "bigint":
+        if isinstance(schema["ts"].dataType, LongType):
             # `div`, not `/`: epoch-nanos exceed double's 53-bit mantissa, so
             # float division would round the microsecond off by one.
             raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         else:
             raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return raw
 
 
 # parallel_scan's partition-count probe, memoized: the probe is a py4j

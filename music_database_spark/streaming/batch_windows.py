@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from ..plans.relational import _t
 from ..registry import register
+from ..sources.loader import table_schema
 
 SESSION_GAP = "30 minutes"
 
@@ -133,29 +134,15 @@ def x_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- true Structured Streaming (T4-T6): smoke-level, exercised by tests ---
 
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (same ts normalization as
     the batch loader: nanos-as-long or native timestamp[us], by generation)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Probe the batch footer once to learn which testdata generation this is
-    # (INT64 epoch-nanos vs parquet timestamp[us]) — a schema-only read.
-    ts_is_long = (
-        dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"] == "bigint"
-    )
+    # The batch loader's memoized footer schema (table_schema also sets
+    # nanosAsLong) tells the testdata generation apart: INT64 epoch-nanos
+    # vs parquet timestamp[us].
+    schema = table_schema(spark, sf_dir, "events")
+    ts_is_long = isinstance(schema["ts"].dataType, T.LongType)
     # File-source streams need a directory. The events table ships in two
     # physical shapes: a single `events.parquet` FILE (driver testdata —
     # stream the sf dir with a glob selecting just that file) or an
@@ -163,9 +150,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and what any Spark writer produces — stream the directory itself;
     # a leaf-name glob of "events.parquet" would match zero part files
     # and silently yield an empty stream, the round-9 layoutcheck catch).
-    schema = _events_raw_schema(
-        T.LongType() if ts_is_long else T.TimestampNTZType()
-    )
     events_path = os.path.join(sf_dir, "events.parquet")
     reader = spark.readStream.schema(schema).format("parquet")
     if os.path.isdir(events_path):

@@ -105,6 +105,9 @@ def test_ratchet_budget_of_shipped_tables_is_within_bounds():
     # anchor coverage must not silently shrink: every anchored query
     # still in the baseline keeps its anchor protection
     assert len(anchor) >= 250
+    # ...and no anchored query may drop out of the baseline table, where
+    # its relaxation would no longer be charged to the budget
+    assert sorted(set(anchor) - set(load_baseline())) == []
 
 
 def test_foreign_cpu_fraction_separates_own_load_from_foreign():

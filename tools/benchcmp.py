@@ -14,6 +14,11 @@ the round-9 stderr alert: the inferred-filter bug class (x_winnow_
 candidates, 93 s cold / 1.09 s warm) is plan-level double compute that
 only the first build pays, so warm medians structurally hide it.
 Thresholds and exemptions are recorded in BASELINE.md §3.
+
+The ratchet-budget gate (RATCHET_BUDGET_DOUBLINGS) and the cold-build
+gate are both evaluated and every violation printed before the single
+nonzero exit; anchored queries missing from BASELINE.md §3 are listed
+on stderr.
 """
 
 from __future__ import annotations
@@ -178,6 +183,7 @@ def main() -> int:
     print(f"cold first-build >=3x warm median ({len(notable)}):")
     for q, r in sorted(notable.items(), key=lambda kv: -kv[1])[:10]:
         print(f"  {r:5.1f}x  {q:32s} cold {colds[q]:6.2f}s vs warm {bench[q]:6.2f}s")
+    failed = False
     anchor = load_anchor()
     if anchor:
         spent, relaxed = ratchet_budget_spent(base, anchor)
@@ -187,6 +193,15 @@ def main() -> int:
         )
         for q, d in relaxed[:5]:
             print(f"  +{d:.3f}  {q}: anchor {anchor[q]} -> baseline {base.get(q)}")
+        # a deleted or renamed §3 entry would escape the budget silently
+        missing = sorted(set(anchor) - set(base))
+        if missing:
+            print(
+                f"ANCHORED QUERIES MISSING FROM BASELINE.md §3 ({len(missing)}), "
+                f"their relaxation is not charged to the budget: "
+                f"{', '.join(missing)}",
+                file=sys.stderr,
+            )
         if spent > RATCHET_BUDGET_DOUBLINGS:
             print(
                 f"RATCHET BUDGET EXCEEDED: {spent:.3f} > "
@@ -196,19 +211,19 @@ def main() -> int:
                 f"the queries faster",
                 file=sys.stderr,
             )
-            return 1
+            failed = True
+    # both gates are evaluated and reported before the one nonzero exit
     violations = cold_gate_violations(bench, colds)
-    if violations:
-        for q, r in violations:
-            print(
-                f"COLD GATE FAIL {q}: cold {colds[q]:.2f}s = {r:.0f}x warm "
-                f"{bench[q]:.2f}s (bar: >={COLD_GATE_RATIO:.0f}x and "
-                f">={COLD_GATE_MIN_SEC}s; exempt list in benchcmp.py)",
-                file=sys.stderr,
-            )
-        return 1
-    print("cold-build gate: pass")
-    return 0
+    for q, r in violations:
+        print(
+            f"COLD GATE FAIL {q}: cold {colds[q]:.2f}s = {r:.0f}x warm "
+            f"{bench[q]:.2f}s (bar: >={COLD_GATE_RATIO:.0f}x and "
+            f">={COLD_GATE_MIN_SEC}s; exempt list in benchcmp.py)",
+            file=sys.stderr,
+        )
+    if not violations:
+        print("cold-build gate: pass")
+    return 1 if failed or violations else 0
 
 
 if __name__ == "__main__":
