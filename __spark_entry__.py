@@ -31,19 +31,26 @@ from music_database_spark.session import tune_for_session  # noqa: E402
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "q6_active_users"  # SURVEY.md §7.2 step 2
 
+Build = Callable[[SparkSession, str], DataFrame]
+
+
+def _tuned(build: Build) -> Build:
+    """``build`` on the driver's session after ``tune_for_session``: the
+    session conventions (session.py) are applied where a session enters
+    the engine, not by the table reads inside a build."""
+    return lambda spark, sf_dir: build(tune_for_session(spark), sf_dir)
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    tune_for_session(spark)
-    spec = load_all()[FLAGSHIP]
-    return spec.build(spark, SMOKE_SF_DIR)
+    return queries()[FLAGSHIP](spark, SMOKE_SF_DIR)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> dict[str, Build]:
     """One entry per implemented operator from SURVEY.md §2 — the whole
-    registry. Computed/aggregate columns are aliased identically to the
-    oracle on both sides."""
-    return {name: spec.build for name, spec in load_all().items()}
+    registry, each build run on the tuned session. Computed/aggregate
+    columns are aliased identically to the oracle on both sides."""
+    return {name: _tuned(spec.build) for name, spec in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
+from ..session import pinned_conf
 from ..sources.loader import scan_wide, wide_docs
 
 
@@ -1498,7 +1499,7 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # and scope the loop's SHUFFLE partitioning to it too: every round is
     # 4 shuffles over a frame of O(edges) rows, so running them at the
     # session's 32 shuffle partitions is pure scheduler overhead at this
-    # graph size (measured 26 s -> ~8 s at sf0.001). Restored in finally;
+    # graph size (measured 26 s -> ~8 s at sf0.001). Scoped by pinned_conf;
     # only the localCheckpoint()ed loop internals execute under the
     # override — the returned plan executes later under session conf
     # (the x_aqe_skew_join build-time-conf precedent).
@@ -1521,9 +1522,7 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
 
     prev = signature(edges)
     rounds = 0
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    try:
+    with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(nparts)}):
         while True:
             rounds += 1
             # Large-star: for each node, larger neighbors attach to the
@@ -1556,8 +1555,6 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
             if sig == prev:
                 break
             prev = sig
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     # Converged: edges form stars node -> component-min. Roots (and any
     # node, defensively) take min over their outgoing labels; roots
     # appear only as targets and label themselves.

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import pinned_conf
 from .relational import _t, dsum
 
 N_BUCKETS = 8
@@ -183,23 +184,14 @@ def _aqe_skew_join_run(spark: SparkSession, sf_dir: str):
         .repartition(16)  # many mappers: skew splits at mapper granularity
     )
     od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    pins = {
+    with pinned_conf(spark, {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force the SMJ path
-    }
-    saved: dict[str, str | None] = {}
-    for k in pins:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        for k, v in pins.items():
-            spark.conf.set(k, v)
+    }):
         agg = _agg(li.join(od, li.k == od.o_orderkey))
         # Execute NOW, under the pins: localCheckpoint materializes the
         # 5-row aggregate through this DataFrame's own query execution,
@@ -207,12 +199,6 @@ def _aqe_skew_join_run(spark: SparkSession, sf_dir: str):
         # partition) while the thresholds are in force.
         ck = agg.localCheckpoint()
         plan = agg._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return ck, plan
 
 
@@ -249,20 +235,11 @@ def x_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the session confs are already back to their defaults."""
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 1)
-    pins = {
+    with pinned_conf(spark, {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    }
-    saved: dict[str, str | None] = {}
-    for k in pins:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        for k, v in pins.items():
-            spark.conf.set(k, v)
+    }):
         q = (
             li.join(part, li.l_partkey == part.p_partkey)
             .groupBy(F.col("p_brand").alias("brand"))
@@ -270,10 +247,4 @@ def x_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("brand")
         )
         q._jdf.queryExecution().executedPlan()  # plan (and inject) under the pins
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return q

@@ -1,16 +1,21 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory and the engine's session conventions.
 
-Conventions (SURVEY.md §4.4): AQE on (runtime re-plan, skew-join,
-partition coalescing), Arrow on (vectorized Python<->JVM transfer),
-UTC session time zone (oracle comparisons must not depend on host TZ),
-shuffle partitions sized to the local core count rather than the 200
-default — on a real cluster this would be ~2-3x total executor cores
-and AQE coalesces down from there.
+CONVENTIONS (SURVEY.md §4.4) is the one table of the SQL confs the
+engine relies on, and this is the one module that sets session conf
+(``loader.table_schema``'s nanosAsLong aside: a read requirement of the
+events format). ``get_spark`` feeds the table to its builder;
+``tune_for_session`` applies it to a session built elsewhere, the
+driver's, through ``__spark_entry__``. So a session gets it where it
+enters the engine, never per table read. A conf a query needs only
+while it plans goes through ``pinned_conf``, which restores it exactly.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -43,6 +48,33 @@ def _excluded_rules_conf(existing: str | None = None) -> str:
     return ",".join(merged)
 
 
+def _local_shuffle_partitions(current: str | None) -> str:
+    """The local core count while the session has the 200 default."""
+    if current not in (None, "200"):
+        return current
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return cpus if cpus.isdigit() else "32"
+
+
+# a value, or a rule from the session's current value (None: unset)
+CONVENTIONS: dict[str, str | Callable[[str | None], str]] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # year()/window()/date_format follow the session zone, while DuckDB
+    # reads the same parquet values as naive wall-clock
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",  # vectorized Python<->JVM
+    "spark.sql.optimizer.excludedRules": _excluded_rules_conf,
+    # on a cluster ~2-3x its cores; AQE coalesces down from there
+    "spark.sql.shuffle.partitions": _local_shuffle_partitions,
+}
+
+
+def _conventions(current: Callable[[str], str | None]) -> dict[str, str]:
+    return {k: v if isinstance(v, str) else v(current(k)) for k, v in CONVENTIONS.items()}
+
+
 def get_spark(
     app_name: str = "music-database-spark",
     cpus: str | None = None,
@@ -50,20 +82,16 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.sql.optimizer.excludedRules", _excluded_rules_conf())
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        **_conventions(lambda _key: None),
+        # a built session sizes shuffles explicitly, not by the 200 rule
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or 32),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -71,21 +99,34 @@ def get_spark(
 
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conventions to an externally-created session
-    (the driver hands us its own SparkSession in __spark_entry__.entry)."""
-    try:
-        existing = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-    except Exception:
-        existing = None
-    for k, v in [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.optimizer.excludedRules", _excluded_rules_conf(existing)),
-    ]:
+    """Apply CONVENTIONS to a session this package did not build (the
+    driver hands us its own SparkSession in __spark_entry__). Idempotent."""
+    for k, v in _conventions(lambda key: spark.conf.get(key, None)).items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static confs can't be set post-start; defaults are fine
+        except Exception as e:  # pragma: no cover - only reachable on exotic sessions
+            # an unapplied zone would surface as opaque oracle mismatches
+            logging.getLogger(__name__).warning("convention %s=%s not applied: %s", k, v, e)
     return spark
+
+
+def _set_conf(spark: SparkSession, conf: dict[str, str | None]) -> None:
+    for k, v in conf.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, pins: dict[str, str | None]) -> Iterator[SparkSession]:
+    """Hold ``pins`` (None unsets) for a ``with`` body, then restore
+    each key's prior value, or unset it if it had none, also when the
+    body raises. Restoring the effective default instead would leave it
+    set explicitly on a long-lived session."""
+    saved = {k: spark.conf.get(k, None) for k in pins}
+    try:
+        _set_conf(spark, pins)
+        yield spark
+    finally:
+        _set_conf(spark, saved)

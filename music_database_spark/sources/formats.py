@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import pinned_conf
 from .loader import load_table
 
 
@@ -329,12 +330,8 @@ def x_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("day") == "2024-01-15")
         .withColumn("value", F.col("value") * 2)
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with pinned_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         fixed.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     back = spark.read.parquet(path)
     return (
         # same DATE-inference note as x_dynamic_partition_pruning: pin

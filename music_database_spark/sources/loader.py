@@ -8,7 +8,6 @@ scan with predicate pushdown and column pruning for free.
 
 from __future__ import annotations
 
-import logging
 import os
 import zipfile
 
@@ -89,8 +88,9 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     type tells the testdata generation apart."""
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # Runtime SQL conf; only affects NANOS-annotated INT64 columns, so
-        # the millisecond timestamps in orders/lineitem are untouched.
+        # A read requirement of the events format (only NANOS INT64 columns
+        # change), set on every call, not only on a memo miss: a
+        # newSession() shares the applicationId but not the SQL conf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, path, source_content_tag(sf_dir, [name]))
     schema = _SCHEMAS.get(key)
@@ -102,7 +102,8 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one table. Filters/projections applied downstream
     are pushed into this scan by Catalyst (verify via .explain: PushedFilters,
-    ReadSchema).
+    ReadSchema). It sets no session conf: sessions get the conventions it
+    relies on, such as the UTC zone, where they enter the engine (session.py).
 
     The reader gets the table's schema from ``table_schema``, so only the
     first call per session and file version starts a schema-inference
@@ -120,30 +121,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     values from ts (date_trunc / strftime / windows), where truncation
     is invisible, and window orderings tie-break on event_id.
     """
-    # Timestamp semantics (year(), window(), date_format) follow the session
-    # time zone; DuckDB treats the same parquet values as naive wall-clock.
-    # Pinning UTC here makes both engines read identical wall-clock values
-    # regardless of which session the driver hands us.
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Right-size shuffles for the local core count when the driver's
-        # session still carries the 200-partition default (runtime conf;
-        # AQE coalesces further). A real cluster would use ~2-3x total cores.
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", cpus if cpus.isdigit() else "32"
-            )
-    except Exception as e:  # pragma: no cover - only reachable on exotic sessions
-        # A silently-unset session timezone would surface later as opaque
-        # value-hash mismatches against the UTC-pinned oracle — make the
-        # swallowed failure visible instead.
-        logging.getLogger(__name__).warning(
-            "session conf pinning failed (oracle comparisons may flake): %s", e
-        )
     ensure_worker_imports(spark)
     schema = table_schema(spark, sf_dir, name)
     raw = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
@@ -151,8 +128,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Driver testdata generations differ: events.ts has shipped both as
         # INT64 epoch-nanos (read as long under nanosAsLong) and as plain
         # parquet timestamp[us] (read as TIMESTAMP_NTZ). Normalize either to
-        # session-zone TIMESTAMP (session tz is pinned UTC above, so NTZ →
-        # LTZ is the identity wall-clock mapping DuckDB's oracle also uses).
+        # session-zone TIMESTAMP (session.py pins UTC, so NTZ → LTZ is the
+        # identity wall-clock mapping DuckDB's oracle also uses).
         if isinstance(schema["ts"].dataType, LongType):
             # `div`, not `/`: epoch-nanos exceed double's 53-bit mantissa, so
             # float division would round the microsecond off by one.
@@ -163,17 +140,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return raw
 
 
-# parallel_scan's partition-count probe, memoized: the probe is a py4j
-# plan-conversion round-trip (~0.1 s), and bench rebuilds every plan per
-# run — per-(app, path, mtime) caching makes repeat builds free while a
-# regenerated testdata drop still re-probes.
-_SCAN_IS_NARROW: dict[tuple[str, str, float], bool] = {}
+# scan_wide's partition-count probe, memoized like table_schema: the
+# probe is a py4j plan-conversion round-trip (~0.1 s), and bench rebuilds
+# every plan per run — a new session or a rewritten file probes again.
+_SCAN_IS_NARROW: dict[tuple[str, str, str], bool] = {}
 
 
-def parallel_scan(df: DataFrame, min_ratio: int = 2, memo_path: str | None = None) -> DataFrame:
-    """Spread a coarse-grained scan across the cluster before a
-    compute-heavy narrow stage (md5 shingling, per-row distance math,
-    array higher-order passes).
+def scan_wide(spark: SparkSession, sf_dir: str, name: str, cols: list[str] | None = None) -> DataFrame:
+    """`load_table`, spread across the cluster before a compute-heavy
+    narrow stage (md5 shingling, per-row distance math, array
+    higher-order passes).
 
     Parquet splits at row-group granularity; the driver's testdata ships
     ONE row group per table, so every scan is a single task and a
@@ -183,33 +159,19 @@ def parallel_scan(df: DataFrame, min_ratio: int = 2, memo_path: str | None = Non
     it is a NO-OP at cluster scale, where a 100 TB table arrives as
     thousands of splits already >= cores — the expensive full-input
     shuffle is never added when the scan is already parallel."""
-    sess = df.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    if memo_path is not None:
-        try:
-            mtime = os.path.getmtime(memo_path)
-        except OSError:
-            mtime = -1.0
-        key = (sess.sparkContext.applicationId, memo_path, mtime)
-        narrow = _SCAN_IS_NARROW.get(key)
-        if narrow is None:
-            narrow = _SCAN_IS_NARROW[key] = (
-                df.rdd.getNumPartitions() * min_ratio <= target
-            )
-    else:  # no memo key supplied: probe the plan directly each time
-        narrow = df.rdd.getNumPartitions() * min_ratio <= target
-    return df.repartition(target) if narrow else df
-
-
-def scan_wide(spark: SparkSession, sf_dir: str, name: str, cols: list[str] | None = None) -> DataFrame:
-    """`load_table` + `parallel_scan` with the probe memoized on the
-    backing parquet file, so repeated plan builds (bench reruns, composed
-    queries loading the same table several times) skip the py4j
-    partition-count probe entirely."""
     df = load_table(spark, sf_dir, name)
     if cols:
         df = df.select(*cols)
-    return parallel_scan(df, memo_path=f"{sf_dir}/{name}.parquet")
+    target = spark.sparkContext.defaultParallelism
+    key = (
+        spark.sparkContext.applicationId,
+        f"{sf_dir}/{name}.parquet",
+        source_content_tag(sf_dir, [name]),
+    )
+    narrow = _SCAN_IS_NARROW.get(key)
+    if narrow is None:
+        narrow = _SCAN_IS_NARROW[key] = df.rdd.getNumPartitions() * 2 <= target
+    return df.repartition(target) if narrow else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

@@ -137,7 +137,6 @@ def x_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (same ts normalization as
     the batch loader: nanos-as-long or native timestamp[us], by generation)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The batch loader's memoized footer schema (table_schema also sets
     # nanosAsLong) tells the testdata generation apart: INT64 epoch-nanos
     # vs parquet timestamp[us].

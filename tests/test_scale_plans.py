@@ -6,21 +6,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from music_database_spark.plans.scale import bucketed_join_frame, x_salted_join
+from music_database_spark.session import pinned_conf
 from music_database_spark.sources.loader import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_bucketed_join_plan_has_no_exchange(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with pinned_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         joined = bucketed_join_frame(spark, SF)
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_salted_join_on_genuinely_skewed_data(spark):
@@ -125,14 +122,10 @@ def test_decontaminate_broadcasts_the_benchmark_side(spark):
     from music_database_spark.registry import load_all
 
     reg = load_all()
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with pinned_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = reg["x_decontaminate"].build(spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_dedup_lines_shuffles_digests_not_text(spark):

@@ -19,7 +19,6 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from music_database_spark.registry import load_all  # noqa: E402
 from music_database_spark.session import get_spark  # noqa: E402
 from music_database_spark.sources.loader import DRIVER_TABLES  # noqa: E402
 
@@ -76,14 +75,19 @@ def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
     names = args[1:] if args and os.path.isdir(args[0]) else args
-    registry = load_all()
-    todo = {n: registry[n] for n in (names or sorted(registry))}
+    # The driver's own adapter: every build runs tune_for_session first,
+    # so a vanilla session is tuned the way the driver's is.
+    from __spark_entry__ import oracle_sql, queries
+
+    builds, oracles = queries(), oracle_sql()
+    todo = names or sorted(builds)
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # Driver-style session: NO tuned conf (no forced UTC, no Arrow
         # flag, default shuffle partitions) — catches any query that
-        # silently depends on get_spark's settings before the driver
-        # does. Pair with cwd outside the repo to also exercise the
-        # addPyFile worker-import path.
+        # silently depends on get_spark's settings or on conf the
+        # adapter does not apply, before the driver does. Pair with cwd
+        # outside the repo to also exercise the addPyFile worker-import
+        # path.
         from pyspark.sql import SparkSession
 
         spark = SparkSession.builder.master(
@@ -93,20 +97,21 @@ def main() -> int:
         spark = get_spark("diffcheck")
     con = duck_con(sf_dir)
     failures = []
-    for name, spec in todo.items():
+    for name in todo:
         t0 = time.time()
         try:
-            sdf = spec.build(spark, sf_dir).toPandas()
+            sdf = builds[name](spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             continue
-        if not spec.oracle:
+        oracle = oracles.get(name)
+        if oracle is None:
             print(f"ok*   {name}: rows-only, {len(sdf)} rows ({time.time()-t0:.1f}s)")
             continue
         try:
-            risky = audit_oracle_types(con, name, spec.oracle)
-            odf = con.execute(spec.oracle).fetchdf()
+            risky = audit_oracle_types(con, name, oracle)
+            odf = con.execute(oracle).fetchdf()
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: oracle error: {type(e).__name__}: {str(e)[:300]}")
