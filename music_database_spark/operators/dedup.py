@@ -20,6 +20,7 @@ from ..registry import register
 from ..plans.relational import _t
 from ..session import pinned_conf
 from ..sources.loader import scan_wide, wide_docs
+from .graph import iterate
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -464,36 +465,14 @@ def label_propagation_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     n_edges = raw_edges.count()
     nparts = max(1, n_edges // 100_000)
     edges = raw_edges.repartition(nparts, "dst").persist()
-    labels = (
+    labels0 = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .repartition(nparts, "node")
-        # lazy: the prev_sum aggregate below is the first action and
-        # materializes the checkpoint blocks in the same job — the
-        # sssp_rounds one-job-per-round recipe (round 13; the eager
-        # variant paid a separate materialization job per round)
-        .localCheckpoint(eager=False)
     )
-    # Convergence check: min-label propagation only ever decreases labels,
-    # so the label sum is strictly decreasing until fixpoint — one cheap
-    # aggregate per round instead of a change-counting join. This first
-    # action materializes the lazy checkpoint above (and edges' persist),
-    # so raw_edges must stay cached until after it.
-    prev_sum = labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-    raw_edges.unpersist()
-    # Loop to the fixpoint, not a fixed round cap: labels only ever
-    # decrease and are bounded below by each component's min id, so the
-    # strictly-decreasing label sum guarantees termination in O(max
-    # component diameter) rounds — and the output is then guaranteed to
-    # equal the oracle's transitive closure even for a pathological
-    # high-diameter duplicate chain. Each round's labels are
-    # localCheckpoint()ed: materialized AND lineage-truncated, so plan
-    # depth stays O(1) per round instead of compounding join-on-join
-    # (round-3 verdict finding #2).
-    rounds = 0
-    while True:
-        rounds += 1
+
+    def propagate(labels: DataFrame) -> DataFrame:
         # min over self and neighbors in ONE groupBy: every node occurs
         # exactly once in labels, so unioning the neighbor contributions
         # with the node's own label and taking min(label) is exactly
@@ -501,19 +480,20 @@ def label_propagation_components(pairs: DataFrame) -> tuple[DataFrame, int]:
         contrib = edges.join(labels, edges.dst == labels.node).select(
             F.col("src").alias("node"), "label"
         )
-        new_labels = (
+        return (
             contrib.unionByName(labels.select("node", "label"))
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            # lazy: the fixpoint-witness aggregate materializes the
-            # blocks — one job per round, not two
-            .localCheckpoint(eager=False)
         )
-        new_sum = new_labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+
+    # Witness: labels only ever decrease and are bounded below by each
+    # component's min id, so the label sum strictly decreases until the
+    # fixpoint. That proves termination in O(max component diameter)
+    # rounds without a cap, and the output then equals the oracle's
+    # transitive closure even for a pathological high-diameter chain.
+    labels, rounds = iterate(labels0, propagate, [F.sum("label")], None)
+    # Round 1's witness collect materialized `edges` from raw_edges.
+    raw_edges.unpersist()
     return labels, rounds
 
 
@@ -1467,9 +1447,7 @@ def x_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
       its closed neighborhood; small-star: every node's smaller-or-equal
       neighbors repoint to the neighborhood min. Edges only ever move
     toward smaller labels, so the (count, sum) signature is monotone
-    and the fixpoint test is one scalar aggregate per round (the
-    x_dedup_clusters convergence recipe). localCheckpoint() per round
-    truncates lineage the same way."""
+    and serves as the `iterate` fixpoint witness."""
     pairs = x_dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
     labels, _rounds = star_components(pairs)
     return labels.select(
@@ -1506,55 +1484,38 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     n_edges = pairs.count()
     nparts = max(1, (2 * n_edges) // 100_000)
     # Directed invariant: (u, v) with v < u ("points down"). id_a < id_b.
-    edges = (
-        pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
-        .repartition(nparts, "u")
-        # lazy: signature(edges) below materializes the blocks in the
-        # same job (round 13 — one job per round, not two)
-        .localCheckpoint(eager=False)
-    )
+    edges0 = pairs.select(
+        F.col("id_b").alias("u"), F.col("id_a").alias("v")
+    ).repartition(nparts, "u")
 
-    def signature(e: DataFrame) -> tuple:
-        r = e.agg(
-            F.count(F.lit(1)).alias("c"), F.sum("u").alias("su"), F.sum("v").alias("sv")
-        ).collect()[0]
-        return (r["c"], r["su"], r["sv"])
+    def star_round(edges: DataFrame) -> DataFrame:
+        # Large-star: for each node, larger neighbors attach to the
+        # min of the closed neighborhood.
+        bidir = edges.select("u", "v").unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = bidir.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        ls = (
+            bidir.filter(F.col("v") > F.col("u"))
+            .join(mins, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        )
+        # Small-star: for each node, all (smaller) neighbors and the
+        # node itself attach to the neighborhood min. Duplicate edges
+        # from skipping distinct() are collapsed by the final
+        # distinct() here — one dedup shuffle per round, not three.
+        smins = ls.groupBy("u").agg(F.min("v").alias("m"))
+        return (
+            ls.join(smins, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(smins.select("u", F.col("m").alias("v")))
+            .distinct()
+        )
 
-    prev = signature(edges)
-    rounds = 0
+    signature = [F.count(F.lit(1)), F.sum("u"), F.sum("v")]
     with pinned_conf(spark, {"spark.sql.shuffle.partitions": str(nparts)}):
-        while True:
-            rounds += 1
-            # Large-star: for each node, larger neighbors attach to the
-            # min of the closed neighborhood.
-            bidir = edges.select("u", "v").unionByName(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = bidir.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-            ls = (
-                bidir.filter(F.col("v") > F.col("u"))
-                .join(mins, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # Small-star: for each node, all (smaller) neighbors and the
-            # node itself attach to the neighborhood min. Duplicate edges
-            # from skipping distinct() are collapsed by the final
-            # distinct() here — one dedup shuffle per round, not three.
-            smins = ls.groupBy("u").agg(F.min("v").alias("m"))
-            ss = (
-                ls.join(smins, "u")
-                .filter(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(smins.select("u", F.col("m").alias("v")))
-                .distinct()
-                # lazy: signature(ss) is the materializing action
-                .localCheckpoint(eager=False)
-            )
-            sig = signature(ss)
-            edges = ss
-            if sig == prev:
-                break
-            prev = sig
+        edges, rounds = iterate(edges0, star_round, signature, None)
     # Converged: edges form stars node -> component-min. Roots (and any
     # node, defensively) take min over their outgoing labels; roots
     # appear only as targets and label themselves.

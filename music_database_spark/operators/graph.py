@@ -22,7 +22,9 @@ operators/dedup.py (x_dedup_clusters).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
@@ -32,7 +34,41 @@ from ..sources.loader import scan_wide
 PR_UNIT = 1_000_000_000  # 1.0 in integer billionths
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping d = 0.85 as a ratio
 PR_BASE = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN  # (1-d)*unit
-PR_ITERS = 3  # fixed iteration count, unrolled identically in the oracle
+PR_ITERS = 3  # iteration cap, unrolled identically in the oracle
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    witness: list[Column],
+    max_rounds: int | None,
+) -> tuple[DataFrame, int]:
+    """Run `state = step(state)` to a fixpoint; return the last state and
+    the number of rounds run. The one loop of the iterative family:
+
+    * every state, the initial one included, is localCheckpoint()ed
+      lazily, so plan depth stays O(1) per round;
+    * each round evaluates `witness` (aggregate Columns) in ONE
+      `state.agg(*witness).collect()`, which also materializes the new
+      checkpoint: no separate materialization job, and no witness for
+      the initial state;
+    * the loop stops at the first round whose witness tuple repeats the
+      previous round's, or after `max_rounds` rounds (None: unbounded).
+      An equal witness must imply an unchanged state (a monotone count
+      or sum, or the state itself), so an early exit equals what an
+      oracle unrolling `max_rounds` rounds computes.
+    """
+    state = state.localCheckpoint(eager=False)
+    last = None
+    rounds = 0
+    while max_rounds is None or rounds < max_rounds:
+        state = step(state).localCheckpoint(eager=False)
+        rounds += 1
+        cur = tuple(state.agg(*witness).collect()[0])
+        if cur == last:
+            break
+        last = cur
+    return state, rounds
 
 
 @register(
@@ -97,7 +133,7 @@ PR_ITERS = 3  # fixed iteration count, unrolled identically in the oracle
     """,
 )
 def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank (PR_ITERS fixed iterations, damping 0.85) over
+    """Weighted PageRank (at most PR_ITERS iterations, damping 0.85) over
     the nation trade graph: an edge (customer nation -> supplier nation)
     per lineitem, weighted by trade count. Integer-billionth rank units
     and integer contribution arithmetic make every iteration exact, so
@@ -111,9 +147,9 @@ def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy dst — no shuffle grows with iteration count, and a general
     graph would co-partition edges and ranks on src so iterations reuse
     one partitioning (the standard Pregel-on-relational layout). The
-    fixed iteration count is the deterministic analog of x_dedup_clusters'
-    fixpoint loop; convergence-to-tolerance would swap the loop bound
-    for the same scalar-aggregate check used there.
+    iterations run through `iterate` with the exact rank vector as the
+    witness, so a repeated vector is a true fixpoint and stopping there
+    equals the oracle's PR_ITERS unrolled rounds.
     """
     li = scan_wide(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -142,24 +178,29 @@ def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    pr = nodes.crossJoin(F.broadcast(n_nodes)).select(
+    pr0 = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "n", F.expr(f"CAST({PR_UNIT} div n_nodes AS BIGINT)").alias("pr")
     )
     contrib_expr = (
         f"CAST(SUM(({PR_DAMP_NUM} * pr * w) div ({PR_DAMP_DEN} * ow)) AS BIGINT)"
     )
-    for _ in range(PR_ITERS):
+
+    def pr_round(pr: DataFrame) -> DataFrame:
         contrib = (
             e2.join(F.broadcast(pr), e2.src == pr.n)
             .groupBy("dst")
             .agg(F.expr(contrib_expr).alias("c"))
         )
-        pr = nodes.join(contrib, nodes.n == contrib.dst, "left").select(
+        return nodes.join(contrib, nodes.n == contrib.dst, "left").select(
             "n",
             (F.lit(PR_BASE) + F.coalesce(F.col("c"), F.lit(0)))
             .cast("bigint")
             .alias("pr"),
         )
+
+    pr, _ = iterate(
+        pr0, pr_round, [F.sort_array(F.collect_list(F.struct("n", "pr")))], PR_ITERS
+    )
     return (
         pr.join(F.broadcast(nation), pr.n == nation.n_nationkey)
         .select(
@@ -424,6 +465,40 @@ def _kcore_oracle() -> str:
     )
 
 
+def kcore_peel(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """x_kcore's peel loop: the KCORE_K-core of the customer-supplier
+    graph as undirected (n, m) edges, and the rounds run (an unchanged
+    edge count is the fixpoint: peeling is monotone)."""
+    li = scan_wide(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    e0 = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("u"),
+            (F.col("l_suppkey") * 2 + 1).alias("v"),
+        )
+        .distinct()
+    )
+    und = e0.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
+        e0.select(F.col("v").alias("n"), F.col("u").alias("m"))
+    )
+
+    def peel(und: DataFrame) -> DataFrame:
+        alive = (
+            und.groupBy("n")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .filter(F.col("d") >= KCORE_K)
+            .select("n")
+        )
+        return (
+            und.join(alive, "n")
+            .join(alive.withColumnRenamed("n", "m"), "m")
+            .select("n", "m")
+        )
+
+    return iterate(und, peel, [F.count(F.lit(1))], KCORE_ROUNDS)
+
+
 @register("x_kcore", tags=("EXT", "X2", "J1", "A1"), oracle=_kcore_oracle())
 def x_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core decomposition (iterative degeneracy peeling) of the
@@ -435,55 +510,18 @@ def x_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     complement of the components queries). Output: each core member
     with its within-core degree.
 
-    Iterative-until-fixpoint on Spark (early exit when the edge count
-    stops changing — peeling is monotone, so an equal count IS the
-    fixpoint), bounded by the same KCORE_ROUNDS the DuckDB oracle
-    unrolls as chained CTEs, making a genuinely iterative algorithm
-    value-hash-checkable.
+    Iterative-until-fixpoint on Spark (`kcore_peel`: early exit when
+    the edge count stops changing), bounded by the same KCORE_ROUNDS
+    the DuckDB oracle unrolls as chained CTEs, making a genuinely
+    iterative algorithm value-hash-checkable.
 
     100 TB design: each round is one partial-aggregable degree count +
     two node-keyed semi-joins (digest-sized rows: two bigints per
-    edge); per-round localCheckpoint truncates lineage exactly like the
-    components loops (dedup.py:314); rounds needed in practice ~ a few
-    (peeling cascades die out fast on heavy-tailed degree
-    distributions). Reference parity: no graph surface in the
+    edge), checkpointed per round by `iterate`; rounds needed in
+    practice ~ a few (peeling cascades die out fast on heavy-tailed
+    degree distributions). Reference parity: no graph surface in the
     reference (SURVEY.md §2 EXT mandate)."""
-    li = scan_wide(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey"])
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    und = (
-        e0.select(F.col("u").alias("n"), F.col("v").alias("m"))
-        .unionAll(e0.select(F.col("v").alias("n"), F.col("u").alias("m")))
-        .localCheckpoint()
-    )
-    last = und.count()
-    for _ in range(KCORE_ROUNDS):
-        alive = (
-            und.groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= KCORE_K)
-            .select("n")
-        )
-        # lazy checkpoint: the count() action below both materializes the
-        # checkpoint blocks and serves as the fixpoint witness — one job
-        # per peel round instead of two (round-5 verdict ask #8 recipe)
-        und = (
-            und.join(alive, "n")
-            .join(alive.withColumnRenamed("n", "m"), "m")
-            .select("n", "m")
-            .localCheckpoint(eager=False)
-        )
-        cnt = und.count()
-        if cnt == last:  # fixpoint: every later round is a no-op
-            break
-        last = cnt
+    und, _rounds = kcore_peel(spark, sf_dir)
     return (
         und.groupBy("n")
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
@@ -696,32 +734,23 @@ def _sssp_oracle() -> str:
 def sssp_rounds(edges: DataFrame, src: int, rounds: int) -> DataFrame:
     """Bounded Bellman-Ford over a (src, dst, w) edge frame: per round,
     relax every edge out of the current distance vector and take the
-    per-node MIN; early exit when the (count, sum-of-dists) pair stops
-    changing (nodes only get added and dists only shrink, so the
-    monotone pair is a sound fixpoint witness). localCheckpoint per
-    round truncates lineage (the components-loop recipe, dedup.py:314).
-    Shared by x_sssp_weighted and the random-graph property test."""
-    spark_ = edges.sparkSession
-    dist = spark_.createDataFrame([(src, 0)], "n long, d long").localCheckpoint()
-    last = (0, -1)
-    for _ in range(rounds):
+    per-node MIN, through `iterate` with the (count, sum-of-dists) pair
+    as the witness (nodes only get added and dists only shrink, so an
+    unchanged pair is a sound fixpoint witness). Shared by
+    x_sssp_weighted and the random-graph property test."""
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = edges.join(dist.withColumnRenamed("n", "src"), "src").select(
             F.col("dst").alias("n"), (F.col("d") + F.col("w")).alias("d")
         )
-        # lazy checkpoint: the witness agg below is the first action over
-        # the new dist, so it materializes the checkpoint blocks in the
-        # same job that computes the fixpoint pair — one job per round
-        dist = (
+        return (
             dist.unionAll(relaxed)
             .groupBy("n")
             .agg(F.min("d").cast("bigint").alias("d"))
-            .localCheckpoint(eager=False)
         )
-        row = dist.agg(F.count(F.lit(1)).alias("c"), F.sum("d").alias("s")).collect()[0]
-        cur = (row["c"], row["s"])
-        if cur == last:  # fixpoint: monotone pair unchanged => converged
-            break
-        last = cur
+
+    dist0 = edges.sparkSession.createDataFrame([(src, 0)], "n long, d long")
+    dist, _rounds = iterate(dist0, relax, [F.count(F.lit(1)), F.sum("d")], rounds)
     return dist
 
 
@@ -743,8 +772,8 @@ def x_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: the expensive stage is the one-off edge build
     (fact-chain join + partial agg, persisted); each round is then an
     equi-join of the edge list against the frontier distance vector +
-    a per-node MIN groupBy — digest-sized rows only, localCheckpoint
-    truncating lineage per round exactly like x_kcore/x_bfs. On a
+    a per-node MIN groupBy — digest-sized rows only, checkpointed per
+    round by `iterate` (see `sssp_rounds`). On a
     general billion-node graph, edges and distances co-partition on
     src so every round reuses one partitioning (Pregel-on-relational);
     round count is bounded by the weighted diameter in hops.

@@ -285,70 +285,24 @@ def test_unrolled_oracle_round_bounds_are_sufficient(spark):
     # The k-core and BFS oracles unroll a FIXED number of rounds; the
     # Spark loops exit at fixpoint. If the driver-scale data ever needed
     # more rounds than the oracle unrolls, the hash check would diverge —
-    # assert the fixpoint margin here so the bound failing shows up as a
-    # named test, not a mystery mismatch.
+    # assert the fixpoint margin on the real loops here, so the bound
+    # failing shows up as a named test, not a mystery mismatch.
     from pyspark.sql import functions as F
 
     from music_database_spark.operators.graph import (
         BFS_ROUNDS,
-        BFS_SRC_CUST,
-        KCORE_K,
         KCORE_ROUNDS,
+        kcore_peel,
+        x_bfs,
     )
-    from music_database_spark.plans.relational import _t
-    from music_database_spark.sources.loader import scan_wide
 
     sf = "/root/testdata/sf0.01"
-    li = scan_wide(spark, sf, "lineitem", ["l_orderkey", "l_suppkey"])
-    orders = _t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"), (F.col("l_suppkey") * 2 + 1).alias("v")
-        )
-        .distinct()
-    )
-    und = (
-        e0.select(F.col("u").alias("n"), F.col("v").alias("m"))
-        .unionAll(e0.select(F.col("v").alias("n"), F.col("u").alias("m")))
-        .localCheckpoint()
-    )
-    # k-core: count peel rounds to fixpoint
-    last, rounds = und.count(), 0
-    cur = und
-    for _ in range(KCORE_ROUNDS):
-        alive = (
-            cur.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= KCORE_K).select("n")
-        )
-        cur = (
-            cur.join(alive, "n")
-            .join(alive.withColumnRenamed("n", "m"), "m")
-            .select("n", "m")
-            .localCheckpoint()
-        )
-        rounds += 1
-        c = cur.count()
-        if c == last:
-            break
-        last = c
+    _core, rounds = kcore_peel(spark, sf)
     assert rounds < KCORE_ROUNDS, "peel used the whole budget - raise KCORE_ROUNDS"
-    # BFS: frontier must empty with margin
-    frontier = spark.createDataFrame([(BFS_SRC_CUST * 2,)], "n long")
-    visited = frontier
-    used = 0
-    for i in range(1, BFS_ROUNDS + 1):
-        frontier = (
-            und.join(frontier.withColumnRenamed("n", "fn"), F.col("n") == F.col("fn"))
-            .select(F.col("m").alias("n")).distinct()
-            .join(visited, "n", "left_anti")
-            .localCheckpoint()
-        )
-        used = i
-        if frontier.count() == 0:
-            break
-        visited = visited.unionAll(frontier)
-    assert used < BFS_ROUNDS, "BFS used the whole budget - raise BFS_ROUNDS"
+    # BFS: the loop ran max(dist) + 1 rounds, the last finding an empty
+    # frontier (fewer when the saturation exit fires)
+    max_dist = x_bfs(spark, sf).agg(F.max("dist")).collect()[0][0]
+    assert max_dist + 1 < BFS_ROUNDS, "BFS used the whole budget - raise BFS_ROUNDS"
 
 
 def test_planaudit_lint_is_clean_on_representative_plans(spark):

@@ -19,16 +19,22 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from music_database_spark.operators.ranking import release_rank_caches  # noqa: E402
 from music_database_spark.registry import load_all  # noqa: E402
 from music_database_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int]:
+def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int, int]:
+    """One counted build-and-run: jobs, stages, tasks, and the Exchange
+    count of the executed plan of the DataFrame that run built (an
+    iterative query's build runs every round's collect, so a second
+    build just for the plan would repeat them)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
-    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    df = build(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
     sc.setJobGroup(None, None)
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
@@ -42,7 +48,8 @@ def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int]:
         si = tracker.getStageInfo(s)
         if si:
             tasks += si.numTasks
-    return len(jobs), len(stages), tasks
+    nexch = df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    return len(jobs), len(stages), tasks, nexch
 
 
 def main() -> int:
@@ -62,12 +69,8 @@ def main() -> int:
         # throwaway run: codegen compile, cache materialization paths warm
         spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
-        from music_database_spark.operators.ranking import release_rank_caches
-
         release_rank_caches()
-        jobs, stages, tasks = run_counted(spark, spec.build, sf_dir, f"jc_{name}")
-        plan = spec.build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        nexch = plan.count("Exchange")
+        jobs, stages, tasks, nexch = run_counted(spark, spec.build, sf_dir, f"jc_{name}")
         print(f"{name}: jobs={jobs} stages={stages} tasks={tasks} plan_exchanges={nexch}")
         spark.catalog.clearCache()
         release_rank_caches()
