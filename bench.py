@@ -43,9 +43,8 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from music_database_spark.operators.ranking import release_rank_caches  # noqa: E402
 from music_database_spark.registry import load_all  # noqa: E402
-from music_database_spark.session import get_spark  # noqa: E402
+from music_database_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
@@ -191,7 +190,7 @@ def foreign_cpu_fraction(
 
 def time_query(build, spark, sf_dir: str) -> tuple[float, float]:
     """(warm median, cold first run). The warm-up run IS the cold number:
-    with the cache cleared before each query, run 0 pays plan compile +
+    with the cache released before each query, run 0 pays plan compile +
     every persist materialization — the cost a fresh cluster session
     (the only kind a real job gets) pays once per job. Recording it
     closed a real blind spot: x_winnow_candidates benched 1.09 s warm
@@ -234,18 +233,12 @@ def main() -> int:
         host_busy[name], host_steal[name] = (
             round(v, 3) for v in foreign_cpu_fraction(*snap)
         )
-        # Several operators persist intermediate frames (shingle sets, LSH
-        # signatures) that are reused *within* one execution; across 80+
-        # queries in one session the leaked blocks pile up into storage-
-        # memory pressure that inflates later queries. Clearing between
-        # queries keeps each number order-independent (runs of the SAME
-        # query still share the persist inside time_query).
-        spark.catalog.clearCache()
-        # Also drain the rank family's Python-side persist registry:
-        # clearCache unpersists the blocks but the DataFrame refs (and
-        # their plan objects) would otherwise accumulate on the driver
-        # across hundreds of queries (round-12 ADVICE).
-        release_rank_caches()
+        # Operators cache and checkpoint intermediate frames (shingle
+        # sets, LSH signatures, loop states) reused *within* one
+        # execution; releasing them between queries keeps each number
+        # order-independent (runs of the SAME query still share the
+        # persist inside time_query).
+        release()
         print(f"# {name}: {results[name]}s", file=sys.stderr)
     # Flag pathological cold/warm ratios loudly: a first build >=10x its
     # warm median on a non-trivial query is the inferred-filter bug class

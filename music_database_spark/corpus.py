@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .operators.dedup import MAX_BAND_FREQ, shingle_frame, minhash_signature
+from .operators.dedup import minhash_pairs
+from .session import cached
 
 
 class CorpusPipeline:
@@ -56,36 +57,7 @@ class CorpusPipeline:
         >= threshold. Banded buckets with a hot-bucket cap — candidates
         stay ~linear in corpus size (same spine as the registered
         x_dedup_minhash query). Returns (id_a, id_b, jaccard)."""
-        sh = shingle_frame(self.docs, self.id_col, self.text_col).persist()
-        # persisted: feeds the cap pass and both candidate-join sides
-        bands = minhash_signature(sh).persist()
-        sizes = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("bsz"))
-        bands = bands.join(
-            sizes.filter(F.col("bsz") <= MAX_BAND_FREQ).select("band_id", "band_hash"),
-            ["band_id", "band_hash"],
-        )
-        cand = (
-            bands.alias("a")
-            .join(
-                bands.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        return (
-            cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-            .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("__inter") / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
+        return minhash_pairs(self.docs, self.id_col, self.text_col, threshold)
 
     def shingle_index(self):
         """Materialize the rare-shingle inverted index ONCE (persisted)
@@ -812,14 +784,13 @@ class CorpusPipeline:
             .when(n_tok < E[3], "len_256")
             .otherwise("len_512")
         )
-        g = (
+        g = cached(
             self.docs.select(F.col(by), n_tok.alias("__nt"), bucket.alias("bucket"))
             .groupBy(by, "bucket")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum("__nt").cast("bigint").alias("n_tokens"),
             )
-            .persist()
         )
         tot = g.agg(
             F.sum("n_tokens").cast("bigint").alias("__all"),
@@ -853,10 +824,9 @@ class CorpusPipeline:
         bucket = (
             F.conv(F.substring(F.md5("__tok"), 1, 8), 16, 10).cast("bigint") % buckets
         )
-        counts = (
+        counts = cached(
             tok.groupBy("__id", "__t", bucket.alias("__b"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
-            .persist()
         )
         stats = counts.groupBy("__b").agg(
             F.sum(F.when(F.col("__t"), F.col("__c")).otherwise(F.lit(0)))

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..operators.ranking import two_level_rank
 from ..registry import register
 from ..sources.loader import load_table, wide_docs
+from ..session import cached
 
 _docs = wide_docs
 
@@ -371,10 +372,9 @@ def novelty_per_doc(
     ngram key; the only join is id-keyed. Shared by the registered query
     and CorpusPipeline."""
     sh_arr = novelty_shingle_arr(text_col, ngram)
-    sh = (
+    sh = cached(  # read twice: per-doc totals and the first-occurrence index
         docs.select(F.col(id_col).alias("id"), F.explode(sh_arr).alias("h"))
         .dropDuplicates(["id", "h"])
-        .persist()  # read twice: per-doc totals and the first-occurrence index
     )
     novel = (
         sh.groupBy("h")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from ..session import pinned_conf
+from ..session import cached, pinned_conf
 from ..sources.loader import scan_wide, wide_docs
 from .graph import iterate
 
@@ -188,13 +188,13 @@ def rare_shingle_index(
     drop and serves every verify that needs shingle intersections
     (Jaccard, containment, corpus dedup) — see CorpusPipeline.
     shingle_index for the shared-materialization surface."""
-    sh = docs.select(
+    sh = cached(docs.select(
         F.col(id_col).alias("doc_id"), F.explode(shingles(F.col(text_col))).alias("shingle")
-    ).persist()
+    ))
     rare = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq")).filter(
         F.col("freq") <= MAX_SHINGLE_FREQ
     )
-    filtered = sh.join(rare.select("shingle"), "shingle").persist()
+    filtered = cached(sh.join(rare.select("shingle"), "shingle"))
     sizes = filtered.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     return filtered, sizes
 
@@ -298,28 +298,28 @@ def minhash_signature(sh: DataFrame) -> DataFrame:
     return bands
 
 
-@register("x_dedup_minhash", tags=("EXT", "X2"), oracle=None, bench=True)
-def x_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs: shingle -> 32-way minhash -> 8 bands ->
-    self-join on (band_id, band_hash) -> verify exact shingle-Jaccard >= 0.6.
-    The join is on band buckets (candidates ~ linear), and verification
-    re-joins only candidate ids back to their shingle sets.
+def minhash_pairs(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.6
+) -> DataFrame:
+    """(id_a, id_b, jaccard) — the MinHash-LSH near-dup spine: shingle
+    -> 32-way minhash -> 8 bands -> capped self-join on (band_id,
+    band_hash) -> verify exact shingle-Jaccard >= threshold. The join is
+    on band buckets (candidates ~ linear), and verification re-joins
+    only candidate ids back to their shingle sets.
 
-    The shingle frame is persisted so signature generation and the
-    verification re-join share one tokenization pass (it feeds three plan
-    branches). At cluster scale the equivalent move is materializing the
-    signature/shingle table to parquet once per corpus snapshot."""
-    docs = _t(spark, sf_dir, "documents")
-    sh_cached = shingle_frame(docs, "doc_id", "text").persist()
-    # Persist the band frame too: it feeds three plan branches (the
-    # bucket-size cap pass and both sides of the candidate self-join);
-    # without it the 32-hash signature aggregation runs three times.
-    bands = minhash_signature(sh_cached).persist()
+    The shingle frame is cached so signature generation and the
+    verification re-join share one tokenization pass (it feeds three
+    plan branches); so is the band frame, which feeds the bucket-size
+    cap pass and both sides of the candidate self-join (without it the
+    32-hash signature aggregation runs three times). At cluster scale
+    the equivalent move is materializing the signature/shingle table to
+    parquet once per corpus snapshot."""
+    sh = cached(shingle_frame(docs, id_col, text_col))
+    bands = cached(minhash_signature(sh))
     # Hot-bucket cap (freq_capped): dense duplicate clusters that would
     # serialize one task are exact-dedup's job (x_dedup_exact).
     cand = candidate_pairs(bands, ["band_id", "band_hash"], "id", cap=MAX_BAND_FREQ)
-    sh = sh_cached
-    verified = (
+    return (
         cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
@@ -327,11 +327,15 @@ def x_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jaccard",
             F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
         )
-        .filter(F.col("jaccard") >= 0.6)
+        .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
     )
-    return verified
+
+
+@register("x_dedup_minhash", tags=("EXT", "X2"), oracle=None, bench=True)
+def x_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup pairs (minhash_pairs), Jaccard >= 0.6."""
+    return minhash_pairs(_t(spark, sf_dir, "documents")).orderBy("id_a", "id_b")
 
 
 @register(
@@ -451,10 +455,9 @@ def label_propagation_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     appearing in any pair) and the round count, which is O(max component
     diameter). Shared by x_dedup_clusters and the round-count experiment
     in tests/test_pipeline.py."""
-    raw_edges = (
+    raw_edges = cached(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .persist()
     )
     # Size the iteration's partitioning from the component GRAPH, not the
     # corpus: the label frames hold only docs that appear in some near-dup
@@ -464,7 +467,7 @@ def label_propagation_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # per partition keeps each round's frames executor-sized at any scale.
     n_edges = raw_edges.count()
     nparts = max(1, n_edges // 100_000)
-    edges = raw_edges.repartition(nparts, "dst").persist()
+    edges = cached(raw_edges.repartition(nparts, "dst"))
     labels0 = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -491,10 +494,7 @@ def label_propagation_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # fixpoint. That proves termination in O(max component diameter)
     # rounds without a cap, and the output then equals the oracle's
     # transitive closure even for a pathological high-diameter chain.
-    labels, rounds = iterate(labels0, propagate, [F.sum("label")], None)
-    # Round 1's witness collect materialized `edges` from raw_edges.
-    raw_edges.unpersist()
-    return labels, rounds
+    return iterate(labels0, propagate, [F.sum("label")], None)
 
 
 @register(
@@ -553,10 +553,8 @@ def x_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .knn import _projection_planes, lsh_bucket
 
     docs = _t(spark, sf_dir, "documents")
-    vecs = (
-        hashed_bow_frame(docs, "doc_id", "text", 64)
-        .withColumnRenamed("id", "doc_id")
-        .persist()
+    vecs = cached(
+        hashed_bow_frame(docs, "doc_id", "text", 64).withColumnRenamed("id", "doc_id")
     )
     tables = []
     for seed in (7, 19):  # two independent LSH tables
@@ -619,9 +617,9 @@ def x_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # Persisted: the chunk frame feeds the hot-chunk cap pass and both
     # candidate-join sides — without it the Arrow signature pass runs 3x.
-    signed = docs.select("doc_id", "text").mapInPandas(
+    signed = cached(docs.select("doc_id", "text").mapInPandas(
         _simhash_batches, "doc_id bigint, simhash bigint"
-    ).persist()
+    ))
     chunks = signed.select(
         "doc_id",
         "simhash",
@@ -946,7 +944,7 @@ def x_dedup_embedding_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     x_dedup_embedding variant remains as the numpy/HOF exhibit; this is
     the shape a cluster would run."""
     docs = _docs(spark, sf_dir)
-    counts = (
+    counts = cached(
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .select(
             "doc_id",
@@ -957,7 +955,6 @@ def x_dedup_embedding_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     norms = counts.groupBy("doc_id").agg(F.sum(F.col("c") * F.col("c")).cast("bigint").alias("n2"))
     # All EMB_DET_TABLES*EMB_DET_BITS projections as aggregate expressions
@@ -1138,7 +1135,7 @@ def x_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     (5*|inter| >= 3*|union|, i.e. J >= 0.6) — no float compares.
     """
     docs = _docs(spark, sf_dir)
-    shset = shingle_frame(docs, "doc_id", "text").persist()
+    shset = cached(shingle_frame(docs, "doc_id", "text"))
     bands = md5_band_frame(shset)
     cand = candidate_pairs(
         bands, ["band_id", "band_hash"], "id", cap=MAX_BAND_FREQ, cap_style="window"
@@ -1281,7 +1278,7 @@ def x_dedup_incremental_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pairs + exact Jaccard counts), with the index-side hot-bucket cap
     mirrored in the oracle."""
     docs = _docs(spark, sf_dir)
-    shset = shingle_frame(docs, "doc_id", "text").persist()
+    shset = cached(shingle_frame(docs, "doc_id", "text"))
     bands = md5_band_frame(shset)
     w = W.partitionBy("band_id", "band_hash")
     idx = (
@@ -1466,12 +1463,11 @@ def star_components(pairs: DataFrame) -> tuple[DataFrame, int]:
     # n_edges count and the all_nodes derivation — without this the
     # (expensive) upstream pair pipeline would execute three times
     # (code-review finding, round 4).
-    pairs = pairs.persist()
-    all_nodes = (
+    pairs = cached(pairs)
+    all_nodes = cached(
         pairs.select(F.col("id_a").alias("node"))
         .unionByName(pairs.select(F.col("id_b").alias("node")))
         .distinct()
-        .persist()
     )
     # Size partitioning from the component graph (x_dedup_clusters note),
     # and scope the loop's SHUFFLE partitioning to it too: every round is
@@ -1768,9 +1764,8 @@ def x_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup mass is bounded; adversarial corpora add PPJoin's
     positional filter on the same plan."""
     docs = _t(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", F.explode(shingles(F.col("text"))).alias("shingle")
-    ).persist()  # feeds df counts, sizes, prefix build, and both verify sides
+    # feeds df counts, sizes, prefix build, and both verify sides
+    sh = cached(docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle")))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     ranked = (

@@ -30,7 +30,7 @@ from .dedup import (
     shingle_frame,
     wide_docs,
 )
-from .ranking import track_cache
+from ..session import cached
 
 _docs = wide_docs
 
@@ -121,8 +121,8 @@ def x_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (x_quantile_sample's deterministic md5-bucket pattern).
     """
     docs = _docs(spark, sf_dir)
-    shset = track_cache(shingle_frame(docs, "doc_id", "text"))
-    exploded = track_cache(shset.select("id", F.explode("sh").alias("g")))
+    shset = cached(shingle_frame(docs, "doc_id", "text"))
+    exploded = cached(shset.select("id", F.explode("sh").alias("g")))
     rare = (
         exploded.groupBy("g")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -136,14 +136,14 @@ def x_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the array-intersect exact-verify arm runs twice (AQE reuses
     # the identical upstream exchange, but the post-exchange verify work
     # is per-consumer)
-    truth = track_cache(
+    truth = cached(
         tpairs.join(shset.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(shset.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .filter(inter * 5 >= (F.size("sh_a") + F.size("sh_b") - inter) * 3)
         .select("id_a", "id_b")
     )
     bands = md5_band_frame(shset)
-    cand = track_cache(candidate_pairs(
+    cand = cached(candidate_pairs(
         bands, ["band_id", "band_hash"], "id", cap=MAX_BAND_FREQ, cap_style="window"
     ))
     hit = cand.join(truth, ["id_a", "id_b"])
@@ -316,8 +316,8 @@ def x_lsh_curve_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
     full corpus scale the harness runs on a deterministic hash-sampled
     slice like x_dedup_recall."""
     docs = _docs(spark, sf_dir)
-    shset = track_cache(shingle_frame(docs, "doc_id", "text"))
-    exploded = track_cache(shset.select("id", F.explode("sh").alias("g")))
+    shset = cached(shingle_frame(docs, "doc_id", "text"))
+    exploded = cached(shset.select("id", F.explode("sh").alias("g")))
     rare = (
         exploded.groupBy("g")
         .agg(F.count(F.lit(1)).alias("freq"))

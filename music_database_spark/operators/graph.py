@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
+from ..session import cached, checkpoint
 from ..sources.loader import scan_wide
 
 PR_UNIT = 1_000_000_000  # 1.0 in integer billionths
@@ -46,8 +47,9 @@ def iterate(
     """Run `state = step(state)` to a fixpoint; return the last state and
     the number of rounds run. The one loop of the iterative family:
 
-    * every state, the initial one included, is localCheckpoint()ed
-      lazily, so plan depth stays O(1) per round;
+    * every state, the initial one included, is local-checkpointed
+      lazily through session.checkpoint, so plan depth stays O(1) per
+      round and the query's release() frees every round;
     * each round evaluates `witness` (aggregate Columns) in ONE
       `state.agg(*witness).collect()`, which also materializes the new
       checkpoint: no separate materialization job, and no witness for
@@ -58,11 +60,11 @@ def iterate(
       or sum, or the state itself), so an early exit equals what an
       oracle unrolling `max_rounds` rounds computes.
     """
-    state = state.localCheckpoint(eager=False)
+    state = checkpoint(state)
     last = None
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
-        state = step(state).localCheckpoint(eager=False)
+        state = checkpoint(step(state))
         rounds += 1
         cur = tuple(state.agg(*witness).collect()[0])
         if cur == last:
@@ -157,7 +159,10 @@ def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
-    edges = (
+    # Materialized once: outw and nodes re-read the edge list, not the
+    # fact-table join chain that produced it. At 100 TB this is the
+    # write-the-edge-list-to-parquet step.
+    edges = cached(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
@@ -165,14 +170,13 @@ def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        # Materialized once: every iteration (and outw/nodes) re-reads the
-        # edge list, not the fact-table join chain that produced it. At
-        # 100 TB this is the write-the-edge-list-to-parquet step.
-        .persist()
     )
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("ow"))
-    e2 = edges.join(outw, "src")
-    nodes = (
+    # Loop invariants, checkpointed once (round 1 materializes them): a
+    # round reads them instead of re-running the outw groupBy and the
+    # union-distinct shuffle.
+    e2 = checkpoint(edges.join(outw, "src"))
+    nodes = checkpoint(
         edges.select(F.col("src").alias("n"))
         .unionAll(edges.select(F.col("dst").alias("n")))
         .distinct()
@@ -275,7 +279,7 @@ def x_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
-    edges = (
+    edges = cached(  # one dedup shuffle; reused three times by the joins
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
@@ -285,7 +289,6 @@ def x_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("c_nationkey", "s_nationkey").alias("b"),
         )
         .distinct()
-        .persist()  # one dedup shuffle; reused three times by the joins
     )
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -376,7 +379,7 @@ def x_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
-    edges = (
+    edges = cached(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
@@ -386,7 +389,6 @@ def x_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("c_nationkey", "s_nationkey").alias("b"),
         )
         .distinct()
-        .persist()
     )
     deg = (
         edges.select(F.col("a").alias("n"))
@@ -603,18 +605,16 @@ def bfs_levels(
     distinct over just the unseen expansion, lazily checkpointed so the
     fixpoint count is the materializing job."""
     spark_ = edges.sparkSession
-    adj = (
-        edges.groupBy(F.col("src").alias("n"))
-        .agg(F.collect_set("dst").alias("ms"))
-        .localCheckpoint(eager=False)
+    adj = checkpoint(
+        edges.groupBy(F.col("src").alias("n")).agg(F.collect_set("dst").alias("ms"))
     )
     n_nodes = adj.count() if symmetric else None
-    frontier = spark_.createDataFrame([(src,)], "n long").localCheckpoint()
+    frontier = checkpoint(spark_.createDataFrame([(src,)], "n long"), eager=True)
     visited = frontier
     n_visited = 1
     levels = [frontier.select("n", F.lit(0).alias("dist"))]
     for i in range(1, rounds + 1):
-        frontier = (
+        frontier = checkpoint(
             adj.join(
                 F.broadcast(frontier.withColumnRenamed("n", "fn")),
                 F.col("n") == F.col("fn"),
@@ -622,7 +622,6 @@ def bfs_levels(
             .select(F.explode("ms").alias("n"))
             .join(F.broadcast(visited), "n", "left_anti")
             .distinct()
-            .localCheckpoint(eager=False)
         )
         cnt = frontier.count()
         if cnt == 0:
@@ -785,7 +784,7 @@ def x_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     supplier = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
+    edges = checkpoint(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
         .join(supplier, li.l_suppkey == supplier.s_suppkey)
@@ -794,8 +793,8 @@ def x_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1) + F.expr(f"CAST({SSSP_COST_NUM} div count(*) AS BIGINT)"))
             .cast("bigint")
             .alias("w")
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     dist = sssp_rounds(edges, SSSP_SRC, SSSP_ROUNDS)
     return (
@@ -901,7 +900,7 @@ def x_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ns = nation.select(F.col("n_nationkey").alias("src"), F.col("n_regionkey").alias("rsrc"))
     nd = nation.select(F.col("n_nationkey").alias("dst"), F.col("n_regionkey").alias("rdst"))
-    er = e.join(F.broadcast(ns), "src").join(F.broadcast(nd), "dst").localCheckpoint()
+    er = checkpoint(e.join(F.broadcast(ns), "src").join(F.broadcast(nd), "dst"), eager=True)
     m = er.agg((2 * F.sum("w")).cast("bigint").alias("m2"))
     deg = (
         er.select(F.col("src").alias("n"), "w")
@@ -1008,9 +1007,12 @@ def x_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    und = e0.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
-        e0.select(F.col("v").alias("n"), F.col("u").alias("m"))
-    ).localCheckpoint()
+    und = checkpoint(
+        e0.select(F.col("u").alias("n"), F.col("v").alias("m")).unionAll(
+            e0.select(F.col("v").alias("n"), F.col("u").alias("m"))
+        ),
+        eager=True,
+    )
     deg = und.groupBy("n").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     xy = (
         und.join(deg.withColumnRenamed("n", "__n").withColumnRenamed("d", "x"),
@@ -1105,7 +1107,7 @@ def x_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is also the repo-wide barrier convention and stays lazy — the
     # eager localCheckpoint materialized an RDD row copy at build time.
     # Round-10 drift audit in BASELINE.md §3.
-    cps = ps.join(keep, "p").persist()
+    cps = cached(ps.join(keep, "p"))
     deg = cps.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     a = cps.select(F.col("p").alias("pa"), F.col("s").alias("s1"))
     b = cps.select(F.col("p").alias("pb"), F.col("s").alias("s2"))

@@ -44,6 +44,7 @@ from ..sources.loader import scan_wide, wide_emb
 # call sites short.
 _emb = wide_emb
 from ..registry import register
+from ..session import cached
 
 N_PROBES = 10  # fixed probe set: the N lowest vec_ids
 TOP_K = 3
@@ -728,7 +729,7 @@ def _lloyd(emb_dbl: DataFrame, k: int, materialize: bool = True):
     # materialize=False exposes the raw iterative plan (used by the
     # plan-shape test asserting broadcast centroids per iteration).
     if materialize:
-        return cents.persist(), assign.persist()
+        return cached(cents), cached(assign)
     return cents, assign
 
 
@@ -1136,7 +1137,7 @@ def x_embed_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rc"),
     )
     cdec = F.col("c").cast("decimal(18,6)")
-    grid = (
+    grid = cached(
         r.select("label", F.posexplode("rc").alias("pos", "c"))
         .groupBy("label", "pos")
         .agg(
@@ -1144,7 +1145,6 @@ def x_embed_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cdec * cdec).alias("q"),
             F.count(F.lit(1)).alias("nn"),
         )
-        .persist()
     )
     # s comes out of the grid agg as decimal(28,6); multiplying THAT type
     # would cap the product at decimal(38,6) and round every s*s to 6 dp

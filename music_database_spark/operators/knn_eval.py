@@ -46,6 +46,7 @@ from .knn import (
     x_knn_lsh_det,
     x_knn_pq,
 )
+from ..session import checkpoint
 
 def _ann_recall_oracle() -> str:
     """x_ann_recall oracle: the x_knn (exact) and x_knn_lsh_det (LSH)
@@ -384,7 +385,7 @@ def x_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "probe_id", "crnk", F.col("vec_id").alias("neighbor_id"), cos.alias("cosine")
         )
     )
-    lev = (
+    lev = checkpoint(
         cand.select(
             F.explode(F.array(*[F.lit(lv) for lv in PROBE_CURVE_LEVELS])).alias(
                 "nprobe"
@@ -393,9 +394,8 @@ def x_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "crnk",
             "neighbor_id",
             "cosine",
-        )
-        .filter(F.col("crnk") <= F.col("nprobe"))
-        .localCheckpoint()
+        ).filter(F.col("crnk") <= F.col("nprobe")),
+        eager=True,
     )
     wl = W.partitionBy("nprobe", "probe_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")

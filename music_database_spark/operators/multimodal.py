@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.relational import _t
 from ..registry import register
+from ..session import cached
 
 
 @register(
@@ -307,10 +308,10 @@ def x_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             / PHASH_SEGMENTS
         ).alias("mu"),
     )
-    bits = sig.select(
+    bits = cached(sig.select(  # feeds the band explode and both verify sides
         "doc_id",
         F.expr("transform(px, p -> CASE WHEN p > mu THEN 1 ELSE 0 END)").alias("b"),
-    ).persist()  # feeds the band explode and both verify sides
+    ))
     bands = bits.select(
         "doc_id",
         F.explode(

@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from .ranking import track_cache, two_level_rank
+from .ranking import two_level_rank
 from ..sources.loader import scan_wide, wide_docs
+from ..session import cached
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -2120,14 +2121,13 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(n_tok < e[3], "len_256")
         .otherwise("len_512")
     )
-    g = (
+    g = cached(  # 25 cells, read by both the total agg and the output
         docs.select("lang", n_tok.alias("n_tok"), bucket.alias("bucket"))
         .groupBy("lang", "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("n_tokens"),
         )
-        .persist()  # 25 cells, read by both the total agg and the output
     )
     tot = g.agg(
         F.sum("n_tokens").cast("bigint").alias("all_tokens"),
@@ -2233,10 +2233,9 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
         % DSIR_BUCKETS
     )
-    counts = (
+    counts = cached(  # read twice: bucket stats and per-doc weights
         tok.groupBy("doc_id", "lang", bucket.alias("bucket"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()  # read twice: bucket stats and per-doc weights
     )
     buckets = counts.groupBy("bucket").agg(
         F.sum(

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from ..plans.relational import _t
 from ..registry import register
 from ..sources.loader import scan_wide
-from .ranking import track_cache, two_level_rank
+from .ranking import two_level_rank
+from ..session import cached
 
 # (column, kind) pairs profiled over orders; kind picks the min/max
 # string rendering that is bit-identical across Spark and DuckDB.
@@ -588,7 +589,7 @@ def x_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One lazy plan, no driver collects: each check row is a projection
     # of a 1-row aggregate frame; crossJoins glue 1-row frames only.
-    li_agg = li_agg.persist()  # three check rows project from it
+    li_agg = cached(li_agg)  # three check rows project from it
 
     def check(src: DataFrame, name: str, n_col: str, v_col: str) -> DataFrame:
         return src.select(
@@ -2061,7 +2062,7 @@ def x_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("c_mktsegment") == KS_SEG_A, 1).otherwise(0).alias("is_a"),
         )
     )
-    steps = track_cache(
+    steps = cached(
         v.groupBy("cents").agg(
             F.sum(F.col("is_a").cast("bigint")).cast("bigint").alias("a_here"),
             F.sum((1 - F.col("is_a")).cast("bigint")).cast("bigint").alias("b_here"),
@@ -2167,11 +2168,10 @@ def x_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_acctbal") < e[3], 2)
         .otherwise(3)
     )
-    cell = (
+    cell = cached(  # 16 rows, read by segs/bks/tot/grid: one customer scan
         cust.select(F.col("c_mktsegment").alias("segment"), bucket.alias("bucket"))
         .groupBy("segment", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()  # 16 rows, read by segs/bks/tot/grid: one customer scan
     )
     segs = cell.groupBy("segment").agg(F.sum("n").cast("bigint").alias("n_seg"))
     bks = cell.groupBy("bucket").agg(F.sum("n").cast("bigint").alias("n_bucket"))

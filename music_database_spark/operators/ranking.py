@@ -41,13 +41,12 @@ stage stays partition-parallel:
 3. **Rank within buckets**: a PARTITIONED window per bucket, offset by
    step 2 — the main plan's ONLY exchange.
 
-The source frame is persist()ed for SPEED only (the count, the boundary
-sample, and the two bucket consumers would otherwise recompute an
-arbitrarily expensive upstream — e.g. x_theilsen_slope's O(W^2) pair
-generate); correctness is unaffected by eviction. Persisted frames are
-tracked in `_PERSISTED`; long-lived sessions that call the rank family
-repeatedly should call `release_rank_caches()` (bench.py clears cache
-between queries, pytest sessions get it via fixture teardown).
+The source frame is cached for SPEED only (the boundary sample and the
+two bucket consumers would otherwise recompute an arbitrarily expensive
+upstream — e.g. x_theilsen_slope's O(W^2) pair generate); correctness is
+unaffected by eviction. It goes through `session.cached`, so it lives
+until the harness's `session.release()` after the query's sink, like
+every other intermediate the engine persists.
 
 Requirements on `order_cols`: unique per row (include the tie-break
 columns) and NON-NULL (the boundary comparison and the driver-side
@@ -72,20 +71,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-# Frames persisted by two_level_rank for cross-consumer reuse; see
-# release_rank_caches(). Correctness never depends on these surviving.
-_PERSISTED: list[DataFrame] = []
+from ..session import cached, release
 
 BOUNDARY_SEED = 9173  # fixed: boundaries are plan literals either way
 _BOUNDARY_OVERSAMPLE = 64  # sample keys per boundary — balance accuracy
 _MAX_BOUNDS = 255  # cap on compiled boundary literals (expr size bound)
 
 
-def release_rank_caches() -> None:
-    """Unpersist every frame two_level_rank has persisted (speed caches
-    only — safe at any time)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(False)
+release_rank_caches = release  # the name perfbench/worker.py imports
 
 
 def effective_buckets(df: DataFrame) -> int:
@@ -143,14 +136,6 @@ def boundaries_from_rows(rows, order_cols: list[str], nb: int) -> list[tuple]:
     return _pick_bounds(keys, nb)
 
 
-def sample_fraction(n: int, nb: int) -> float:
-    """Seeded-sample fraction targeting _BOUNDARY_OVERSAMPLE keys per
-    boundary. Retained for callers that size their own shared sample;
-    the helper itself now samples without needing n (see
-    boundary_sample)."""
-    return min(1.0, (nb * _BOUNDARY_OVERSAMPLE) / max(n, 1))
-
-
 def boundary_sample(src: DataFrame, cols: list[str], nb: int) -> list:
     """ONE-job bounded uniform sample of `cols`: the nb*_BOUNDARY_OVERSAMPLE
     rows with the smallest rand(seed) tag — a simple random sample whose
@@ -175,13 +160,9 @@ def boundary_sample(src: DataFrame, cols: list[str], nb: int) -> list:
     )
 
 
-def _sample_boundaries(
-    src: DataFrame, order_cols: list[str], nb: int, n: int | None = None
-) -> list[tuple]:
+def _sample_boundaries(src: DataFrame, order_cols: list[str], nb: int) -> list[tuple]:
     """≤ nb-1 ascending composite-key boundaries from a bounded seeded
-    sample, collected once and frozen into the plan as literals. `n` is
-    accepted for call-site compatibility but no longer sizes anything —
-    boundary_sample bounds itself."""
+    sample, collected once and frozen into the plan as literals."""
     if nb <= 1:
         return []
     rows = boundary_sample(src, order_cols, nb)
@@ -194,7 +175,7 @@ def _sample_boundaries(
 def _sql_lit(v) -> str:
     """Render a collected boundary value as an exact Spark SQL literal.
     Covers every key type the call sites rank on; anything else falls
-    back to the Column-API path in _bucket_from_bounds."""
+    back to the Column-API path in bucket_from_bounds."""
     import datetime
 
     if isinstance(v, bool):
@@ -202,7 +183,7 @@ def _sql_lit(v) -> str:
     if isinstance(v, int):
         if not -(2**63) <= v < 2**63:
             # beyond BIGINT: raise TypeError so the Column-API fallback
-            # path in _bucket_from_bounds engages instead of F.expr
+            # path in bucket_from_bounds engages instead of F.expr
             # failing at parse time (round-12 ADVICE)
             raise TypeError(f"int boundary {v} exceeds BIGINT literal range")
         return f"{v}L"  # BIGINT literal; comparisons coerce narrower cols
@@ -220,10 +201,14 @@ def _sql_lit(v) -> str:
     raise TypeError(f"no SQL literal rendering for {type(v).__name__}")
 
 
-def _bucket_from_bounds(order_cols: list[str], bounds: list[tuple]) -> Column:
+def bucket_from_bounds(order_cols: list[str], bounds: list[tuple]) -> Column:
     """Deterministic bucket id: Σ_i [key >= boundary_i] over the
     collected boundary literals — monotone in the composite key, stable
-    across recomputation by construction.
+    across recomputation by construction. Public because
+    x_rfm_segmentation batches three dimensions' bucket totals into one
+    tagged aggregate under it, and those totals are frozen into the
+    plan as two_level_rank's offset literals: both must bucket with
+    this one function (round-13 ADVICE).
 
     Compiled as ONE F.expr string when the boundary values render as
     SQL literals: a Column-API chain of ~nb nested when/otherwise
@@ -254,19 +239,8 @@ def _bucket_from_bounds(order_cols: list[str], bounds: list[tuple]) -> Column:
         return bkt.cast("int")
 
 
-def bucket_from_bounds(order_cols: list[str], bounds: list[tuple]) -> Column:
-    """Public alias of _bucket_from_bounds for cross-module callers
-    (x_rfm_segmentation batches three dimensions' bucket totals into one
-    tagged aggregate): MUST stay bit-identical to two_level_rank's own
-    bucket assignment — the batched totals are frozen into the plan as
-    offset literals under exactly this bucketing (round-13 ADVICE)."""
-    return _bucket_from_bounds(order_cols, bounds)
-
-
-def _bucket_column(
-    src: DataFrame, order_cols: list[str], nb: int, n: int | None = None
-) -> Column:
-    return _bucket_from_bounds(order_cols, _sample_boundaries(src, order_cols, nb, n))
+def _bucket_column(src: DataFrame, order_cols: list[str], nb: int) -> Column:
+    return bucket_from_bounds(order_cols, _sample_boundaries(src, order_cols, nb))
 
 
 def sql_ntile(rn_col: str, n_col: str, k: int) -> Column:
@@ -289,15 +263,6 @@ def sql_ntile(rn_col: str, n_col: str, k: int) -> Column:
     ).cast("int")
 
 
-def track_cache(df: DataFrame) -> DataFrame:
-    """persist() a caller-managed frame and register it with
-    release_rank_caches() — for call sites that rank several slim
-    projections of one shared frame (x_rfm_segmentation)."""
-    src = df.persist()
-    _PERSISTED.append(src)
-    return src
-
-
 def two_level_rank(
     df: DataFrame,
     order_cols: list[str],
@@ -306,7 +271,6 @@ def two_level_rank(
     out_col: str | list[str] | None = None,
     total_col: str | list[str] | None = None,
     nb: int | None = None,
-    n: int | None = None,
     persist: bool = True,
     bounds: list[tuple] | None = None,
     bucket_totals: dict[int, int] | None = None,
@@ -341,16 +305,14 @@ def two_level_rank(
         rank. Must be exactly the totals this function would compute —
         they are frozen into the plan as offset literals.
 
-    n / persist / bounds — driver-action economy for call sites ranking
+    persist / bounds — driver-action economy for call sites ranking
         several projections of one shared frame: persist=False when the
-        input is (a projection of) an already-persisted frame (no
+        input is (a projection of) an already-cached frame (no
         intermediate lineage re-materialized per rank), and precomputed
         boundaries (boundaries_from_rows over ONE shared sample) to
         skip the per-rank sample job (x_rfm_segmentation ranks three
-        2-column projections of one track_cache()d per-customer frame
-        with one shared sample total). `n` is accepted but unused since
-        round 14: the boundary sample is self-bounding, so no count job
-        exists to skip.
+        2-column projections of one cached per-customer frame with one
+        shared sample total).
 
     The input frame must be deterministic under recomputation (round-13
     ADVICE): bucket totals and grand totals are collected once at build
@@ -371,18 +333,13 @@ def two_level_rank(
         outs = [out_col or ("cum" if weight else "rn")]
         tcols = [total_col]
     nb = min(nb or _n_buckets(df), _MAX_BOUNDS + 1)
-    if persist:
-        src = df.persist()
-        _PERSISTED.append(src)
-    else:
-        src = df
+    src = cached(df) if persist else df
     # No count job (round 14): the boundary sample is self-bounding
     # (boundary_sample's top-k-by-random-tag pass), so the sample job is
-    # the cache's materializing action and `n` is never needed here —
-    # the parameter is accepted for call-site compatibility only.
+    # the cache's materializing action.
     if bounds is None:
         bounds = _sample_boundaries(src, order_cols, nb)
-    bucketed = src.withColumn("__bkt", _bucket_from_bounds(order_cols, bounds))
+    bucketed = src.withColumn("__bkt", bucket_from_bounds(order_cols, bounds))
     k = max(1, len(weights))
     aggs = (
         [F.count(F.lit(1)).cast("bigint").alias("__bn_0")]

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources.loader import wide_docs
 from .dedup import bucket_self_join
+from ..session import cached
 
 _docs = wide_docs
 
@@ -128,7 +129,7 @@ def substring_span_runs(
     start_b = start_a - diff."""
     docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     arr = F.split("text", " ")
-    kg = (
+    kg = cached(
         docs.filter(F.size(arr) >= k)
         .select(
             "doc_id",
@@ -151,7 +152,6 @@ def substring_span_runs(
             ).alias("kg"),
         )
         .select("doc_id", "kg.pos", "kg.h")
-        .persist()
     )
     rare = kg.groupBy("h").agg(F.count(F.lit(1)).alias("freq")).filter(
         F.col("freq") <= max_freq

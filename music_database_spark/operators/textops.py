@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from .ranking import track_cache
 from ..sources.loader import scan_wide, wide_docs
+from ..session import cached, checkpoint
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -812,13 +812,13 @@ def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    seg = words.select(
+    seg = checkpoint(words.select(  # materialized by round 1's collect
         "term",
         "w",
         F.concat(
             F.lit(" "), F.concat_ws("  ", F.split("term", "")), F.lit(" ")
         ).alias("seg"),
-    ).localCheckpoint(eager=False)  # materialized by round 1's collect
+    ))
     toks = F.expr("filter(split(seg, ' '), t -> t != '')")
     pair_arr = F.expr(
         "transform(sequence(1, size(filter(split(seg, ' '), t -> t != '')) - 1),"
@@ -843,13 +843,13 @@ def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             # contribute no output rows
             break
         a, b, cnt = best_rows[0]["a"], best_rows[0]["b"], int(best_rows[0]["cnt"])
-        seg = seg.select(
+        seg = checkpoint(seg.select(  # materialized by the next action
             "term",
             "w",
             F.replace(
                 F.col("seg"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
             ).alias("seg"),
-        ).localCheckpoint(eager=False)  # materialized by the next action
+        ))
         after = seg.agg(
             F.sum(F.col("w") * F.size(toks)).cast("bigint").alias("tokens_after")
         )
@@ -1053,10 +1053,8 @@ def winnow_candidate_pairs(
     # are the compact form of the same data the old exploded persist
     # held; explode-from-cache is a cheap narrow re-derivation for the
     # frequency pass and both join sides.
-    fps = (
-        _winnow_fps(docs, id_col, text_col)
-        .persist()
-        .select("doc_id", F.explode("fps").alias("fp"))
+    fps = cached(_winnow_fps(docs, id_col, text_col)).select(
+        "doc_id", F.explode("fps").alias("fp")
     )
     rare = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("freq")).filter(
         F.col("freq") <= max_fp_freq
@@ -1145,11 +1143,10 @@ def x_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("filter(split(text, ' '), t -> t != '')").alias("ts"),
         F.col("text").rlike("[^ ] +[^ ]").alias("has2"),
     )
-    uni = (
+    uni = cached(
         toks.select(F.explode("ts").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c1"))
-        .persist()
     )
     nu = uni.agg(F.sum("c1").cast("bigint").alias("nu"))
     bigrams = F.expr(
@@ -1261,7 +1258,7 @@ def x_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sums at ranks <= 20 only ever read those 20 terms, so the
     scores are bit-identical to folding the full list."""
     kmax = max(NDCG_KS)
-    per_doc = track_cache(
+    per_doc = cached(
         bm25_per_doc(spark, sf_dir)
         .withColumn("__negs", -F.col("score"))
         .withColumn("__negt", -F.col("n_terms"))

@@ -21,12 +21,12 @@ from ..operators.ranking import (
     bucket_from_bounds,
     effective_buckets,
     sql_ntile,
-    track_cache,
     two_level_rank,
 )
 from ..registry import register
 from .relational import _t, disc_price_dec, dsum, ts_range
 from ..sources.loader import scan_wide
+from ..session import cached
 
 
 @register(
@@ -1758,7 +1758,7 @@ def x_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three independent exact global ranks over the per-customer frame,
     # each bucketed-parallel (DESC recency becomes ASC on its negation),
     # chained over one shared persisted frame (see the chaining note below).
-    rfm_c = track_cache(rfm)
+    rfm_c = cached(rfm)
     nb = effective_buckets(rfm_c)
     # ONE shared bounded sample (all three dimensions' key columns, no
     # count job to size it — round 14, the rank family's self-bounding

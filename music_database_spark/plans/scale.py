@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import pinned_conf
+from ..session import checkpoint, pinned_conf
 from .relational import _t, dsum
 
 N_BUCKETS = 8
@@ -197,7 +197,7 @@ def _aqe_skew_join_run(spark: SparkSession, sf_dir: str):
         # 5-row aggregate through this DataFrame's own query execution,
         # so the adaptive plan finalizes (and splits the skewed
         # partition) while the thresholds are in force.
-        ck = agg.localCheckpoint()
+        ck = checkpoint(agg, eager=True)
         plan = agg._jdf.queryExecution().executedPlan().toString()
     return ck, plan
 

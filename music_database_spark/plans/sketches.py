@@ -20,11 +20,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.ranking import track_cache
 from ..registry import register
 from .relational import _t
 from ..functions.vector import as_double_array, dot
 from ..sources.loader import scan_wide
+from ..session import cached
 
 # ---------------------------------------------------------------------------
 # KMV (k-minimum-values) distinct-count sketch
@@ -869,16 +869,13 @@ def x_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "train",
     ).otherwise("heldout")
     arr = F.split("text", " ")
-    # track_cache (persist + drainable registry): the distinct trigram
-    # inventory feeds the sketch side (hs) AND the exact side — without
-    # the persist the pushed-down split filters specialize each
-    # consumer's aggregate subtree and the trigram explode re-runs per
-    # consumer (16 scan/Generate nodes, 62 Exchanges in the round-12
-    # plan; round-13 plan audit). Persisting inside the query keeps
-    # every run computing from parquet; registering it lets
-    # release_rank_caches() drain the ref in long-lived sessions
-    # (round-13 ADVICE — a bare persist leaked the DataFrame ref).
-    toks = track_cache(
+    # cached: the distinct trigram inventory feeds the sketch side (hs)
+    # AND the exact side — without the persist the pushed-down split
+    # filters specialize each consumer's aggregate subtree and the
+    # trigram explode re-runs per consumer (16 scan/Generate nodes, 62
+    # Exchanges in the round-12 plan; round-13 plan audit). Persisting
+    # inside the query keeps every run computing from parquet.
+    toks = cached(
         docs.filter(F.size(arr) >= 3)
         .select(
             split.alias("split"),
@@ -899,7 +896,7 @@ def x_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     k = K_SETOPS
     rn = hs.withColumn("rn", F.row_number().over(W.partitionBy("split").orderBy("h")))
-    kmin = track_cache(rn.filter(F.col("rn") <= k).select("split", "h"))
+    kmin = cached(rn.filter(F.col("rn") <= k).select("split", "h"))
     theta = kmin.groupBy("split").agg(
         F.when(F.count(F.lit(1)) >= k, F.max("h").cast("double"))
         .otherwise(F.lit(_HASH_SPAN))

@@ -17,6 +17,7 @@ from ..registry import register
 from ..operators.ranking import two_level_rank
 from .relational import _t, dsum
 from ..sources.loader import scan_wide
+from ..session import checkpoint
 
 
 @register(
@@ -1340,11 +1341,11 @@ def x_theilsen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     xmax = daily0.agg(F.max("x").alias("xmax"))
-    daily = (
+    daily = checkpoint(
         daily0.crossJoin(F.broadcast(xmax))
         .filter(F.col("x") > F.col("xmax") - TS_WINDOW_DAYS)
-        .select("x", "cents")
-        .localCheckpoint()
+        .select("x", "cents"),
+        eager=True,
     )
     a = daily.select(F.col("x").alias("i"), F.col("cents").alias("ya"))
     b = daily.select(F.col("x").alias("j"), F.col("cents").alias("yb"))

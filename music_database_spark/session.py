@@ -8,6 +8,11 @@ events format). ``get_spark`` feeds the table to its builder;
 driver's, through ``__spark_entry__``. So a session gets it where it
 enters the engine, never per table read. A conf a query needs only
 while it plans goes through ``pinned_conf``, which restores it exactly.
+
+It also owns the lifetime of a query's intermediate state: every
+persist and local checkpoint an operator takes goes through ``cached``
+or ``checkpoint``, which register it, and a harness drains the
+registry with one ``release()`` after the query's sink.
 """
 
 from __future__ import annotations
@@ -17,7 +22,7 @@ import os
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # InferFiltersFromGenerate clones a generate's INPUT EXPRESSION into an
 # inferred `size(e) > 0 AND isnotnull(e)` predicate below the Generate.
@@ -130,3 +135,36 @@ def pinned_conf(spark: SparkSession, pins: dict[str, str | None]) -> Iterator[Sp
         yield spark
     finally:
         _set_conf(spark, saved)
+
+
+# What cached/checkpoint took since the last release(): persisted
+# DataFrames, and the RDDs behind local checkpoints, which no DataFrame
+# unpersist or clearCache() reaches.
+_HELD: list = []
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered for the next ``release()``."""
+    _HELD.append(df.persist())
+    return df
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, its RDD registered for the next
+    ``release()``. The checkpoint's analysed plan is a LogicalRDD over
+    that RDD; a lazy one is materialized by the first action on it."""
+    ck = df.localCheckpoint(eager)
+    _HELD.append(ck._jdf.queryExecution().analyzed().rdd())
+    return ck
+
+
+def release() -> None:
+    """Unpersist everything ``cached`` and ``checkpoint`` registered
+    since the last call, without blocking, and empty the registry.
+
+    Call it only once every result built since the last release has
+    been consumed: a released persist is recomputed on its next use,
+    but a released local checkpoint has no lineage to recompute from,
+    so a frame that reads one fails."""
+    while _HELD:
+        _HELD.pop().unpersist(False)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import pinned_conf
+from ..session import cached, pinned_conf
 from .loader import load_table
 
 
@@ -444,13 +444,12 @@ def x_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.concat_ws(",", "doc_id", "lang", "n_chars"))
         )
         docs.select(line.alias("value")).write.mode("overwrite").text(path)
-    parsed = (
+    parsed = cached(  # required: corrupt-record queries must not prune the parsed cols
         spark.read.option("header", "false")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
         .schema("doc_id bigint, lang string, n_chars bigint, _corrupt string")
         .csv(path)
-        .cache()  # required: corrupt-record queries must not prune the parsed cols
     )
     return parsed.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 from ..registry import register
+from ..session import checkpoint
 
 # Pickle this module's DataSource classes BY VALUE (cloudpickle), not by
 # module reference. Spark's driver-side PythonStreamingSourceRunner
@@ -326,7 +327,9 @@ def x_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError("python stream source did not drain")
     finally:
         q.stop()
-    return spark.table(table).orderBy("sensor_id")
+    out = spark.table(table).orderBy("sensor_id")
+    spark.catalog.dropTempView(table)  # the frame's plan holds the sink itself
+    return out
 
 
 @register(
@@ -435,16 +438,16 @@ def x_stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"recovery did not converge: {committed_rows()} != {STREAM_ROWS}"
             f" (last stream error: {last_err})"
         )
-    result = (
+    # materialized BEFORE the temp dirs are removed
+    result = checkpoint(
         spark.read.parquet(out)
         .groupBy("sensor_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("raw").cast("bigint").alias("sum_raw"),
         )
-        .orderBy("sensor_id")
-        # materialize BEFORE the temp dirs are removed
-        .localCheckpoint()
+        .orderBy("sensor_id"),
+        eager=True,
     )
     shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(out, ignore_errors=True)

@@ -180,7 +180,11 @@ def _run_available_now(stream_df: DataFrame, name: str, output_mode: str = "comp
     # drains to completion); leaving it would accumulate one dir per
     # invocation across bench/test runs.
     shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.table(table)
+    # The frame's analysed plan holds the sink itself, so the view can
+    # go at once; kept, every run would add one to the catalog.
+    out = stream_df.sparkSession.table(table)
+    stream_df.sparkSession.catalog.dropTempView(table)
+    return out
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,9 +18,9 @@ def spark():
 
     s = get_spark("tests", cpus="4", shuffle_partitions=8)
     yield s
-    from music_database_spark.operators.ranking import release_rank_caches
+    from music_database_spark.session import release
 
-    release_rank_caches()  # rank-family speed caches (ranking.py note)
+    release()
     s.stop()
 
 

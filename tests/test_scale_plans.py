@@ -636,7 +636,7 @@ def test_two_level_rank_is_exact_and_balanced_under_95pct_ties(spark):
     from music_database_spark.operators.ranking import _bucket_column
 
     occ = (
-        df.withColumn("b", _bucket_column(df, ["v", "id"], 32, n))
+        df.withColumn("b", _bucket_column(df, ["v", "id"], 32))
         .groupBy("b")
         .count()
         .toPandas()

@@ -401,3 +401,22 @@ def test_fresh_jvm_coldsweep_record_is_clean():
     assert flagged == []
     # every exemption carries a documented why
     assert all(len(why) > 20 for why in coldsweep.ALERT_EXEMPT.values())
+
+
+def test_plan_exchanges_stops_at_a_cached_subplan(spark):
+    """A persisted frame with an inner shuffle contributes only the
+    Exchanges above its scan: the plan string also holds its cached
+    subplan's Exchange, which the run reads but does not execute."""
+    from pyspark.sql import functions as F
+
+    from jobcount import plan_exchanges
+
+    inner = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    try:
+        inner.count()
+        for df, above in ((inner.select("k"), 0), (inner.groupBy("count").count(), 1)):
+            plan = df._jdf.queryExecution().executedPlan()
+            assert plan_exchanges(plan) == above
+            assert plan.toString().count("Exchange") > above
+    finally:
+        inner.unpersist()

@@ -1,6 +1,6 @@
 """Fresh-JVM cold sweep: first-build timings with NOTHING shared.
 
-bench.py's cold number (first build after clearCache) still shares one
+bench.py's cold number (first build after release()) still shares one
 JVM across all 272 queries — JIT-compiled codegen, broadcast relations,
 the parquet footer cache, and Python worker pools are all warm by the
 time most queries run. This tool spawns ONE FRESH PYTHON+JVM PROCESS
@@ -63,7 +63,7 @@ def run_family(module: str) -> None:
     """Child-process mode: fresh session, warm the JVM on a trivial job,
     then time each family query's FIRST (and only) build."""
     from music_database_spark.registry import load_all
-    from music_database_spark.session import get_spark
+    from music_database_spark.session import get_spark, release
 
     reg = load_all()
     names = [n for n, s in reg.items() if s.bench and s.build.__module__ == module]
@@ -106,7 +106,7 @@ def run_family(module: str) -> None:
         except Exception as e:  # recorded, not fatal — the sweep must finish
             print(f"# ERROR {n}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
             out[n] = -1.0
-        spark.catalog.clearCache()
+        release()
     print(json.dumps(out))
 
 

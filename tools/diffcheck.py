@@ -19,7 +19,7 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from music_database_spark.session import get_spark  # noqa: E402
+from music_database_spark.session import get_spark, release  # noqa: E402
 from music_database_spark.sources.loader import DRIVER_TABLES  # noqa: E402
 
 
@@ -105,6 +105,8 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             continue
+        finally:
+            release()
         oracle = oracles.get(name)
         if oracle is None:
             print(f"ok*   {name}: rows-only, {len(sdf)} rows ({time.time()-t0:.1f}s)")

@@ -9,7 +9,7 @@ identically on a loud or quiet host. Usage:
 
 Prints per query: jobs, stages, tasks for one warm execution (one
 throwaway build first so one-time codegen/broadcast warmup is not
-attributed), plus the Exchange count of the final plan."""
+attributed), plus the Exchange count of the final plan (plan_exchanges)."""
 
 from __future__ import annotations
 
@@ -19,11 +19,30 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from music_database_spark.operators.ranking import release_rank_caches  # noqa: E402
 from music_database_spark.registry import load_all  # noqa: E402
-from music_database_spark.session import get_spark  # noqa: E402
+from music_database_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def plan_exchanges(plan) -> int:
+    """Shuffle and broadcast Exchange operators in an executed plan tree
+    (a py4j SparkPlan): an adaptive node counts through its current
+    plan and a query stage through its exchange. Nothing under an
+    InMemoryTableScan counts: the run reads that cached subplan, it
+    does not execute it."""
+    name = plan.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        return 0
+    if name == "AdaptiveSparkPlanExec":
+        return plan_exchanges(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return plan_exchanges(plan.plan())
+    n = int(name in ("ShuffleExchangeExec", "BroadcastExchangeExec"))
+    children = plan.children().iterator()
+    while children.hasNext():
+        n += plan_exchanges(children.next())
+    return n
 
 
 def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int, int]:
@@ -48,8 +67,7 @@ def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int, i
         si = tracker.getStageInfo(s)
         if si:
             tasks += si.numTasks
-    nexch = df._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    return len(jobs), len(stages), tasks, nexch
+    return len(jobs), len(stages), tasks, plan_exchanges(df._jdf.queryExecution().executedPlan())
 
 
 def main() -> int:
@@ -68,12 +86,10 @@ def main() -> int:
         spec = reg[name]
         # throwaway run: codegen compile, cache materialization paths warm
         spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        release_rank_caches()
+        release()
         jobs, stages, tasks, nexch = run_counted(spark, spec.build, sf_dir, f"jc_{name}")
         print(f"{name}: jobs={jobs} stages={stages} tasks={tasks} plan_exchanges={nexch}")
-        spark.catalog.clearCache()
-        release_rank_caches()
+        release()
     return 0
 
 
