@@ -50,13 +50,14 @@ def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup, keep lowest doc_id per identical text. Partitioning key
     is the md5 digest, not the text, so the shuffle moves 16 bytes per row."""
     docs = _t(spark, sf_dir, "documents")
-    w = W.partitionBy(F.md5("text")).orderBy("doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    )
+    return exact_dedup(docs).select("doc_id", "lang").orderBy("doc_id")
+
+
+def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """docs + rn, keeping the lowest id per identical text (rn = 1). The
+    shuffle key is the 16-byte md5 digest, never the document body."""
+    w = W.partitionBy(F.md5(text_col)).orderBy(id_col)
+    return docs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
 
 
 @register(
@@ -1766,6 +1767,19 @@ def x_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # feeds df counts, sizes, prefix build, and both verify sides
     sh = cached(docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle")))
+    jac = F.col("inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+    return (
+        prefix_verify(sh, prefix_candidates(sh))
+        .select("id_a", "id_b", "inter", F.round(jac, 6).alias("jaccard"))
+        .orderBy("id_a", "id_b")
+    )
+
+
+def prefix_candidates(sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_a, n_b): the doc pairs of the (doc_id, shingle)
+    frame `sh` that share a prefix shingle (each doc's first n - ceil(n/2) + 1
+    shingles by (document frequency, shingle)) and pass the size filter
+    3·min(n_a, n_b) >= n_a + n_b — every pair with Jaccard >= 1/2."""
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     ranked = (
@@ -1781,7 +1795,7 @@ def x_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pfx = ranked.filter(
         F.col("rk") <= F.col("n") - F.floor((F.col("n") + 1) / 2) + 1
     ).select("doc_id", "shingle", "n")
-    cand = (
+    return (
         pfx.alias("a")
         .join(
             pfx.alias("b"),
@@ -1797,6 +1811,11 @@ def x_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
+
+
+def prefix_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """prefix_candidates' rows + inter, kept where 3·inter >= n_a + n_b
+    (Jaccard >= 1/2)."""
     # verify sets re-aggregated from the PERSISTED index — not a second
     # scan+shingle pass over the text (the HOF tokenization is the
     # dominant map cost; collect_set over 5 cached columns is not)
@@ -1806,9 +1825,4 @@ def x_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint"))
     )
-    jac = F.col("inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-    return (
-        pairs.filter(3 * F.col("inter") >= F.col("n_a") + F.col("n_b"))
-        .select("id_a", "id_b", "inter", F.round(jac, 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    return pairs.filter(3 * F.col("inter") >= F.col("n_a") + F.col("n_b"))

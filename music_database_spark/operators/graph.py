@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from ..session import cached, checkpoint
+from ..session import cached, checkpoint, release_checkpoint
 from ..sources.loader import scan_wide
 
 PR_UNIT = 1_000_000_000  # 1.0 in integer billionths
@@ -49,11 +49,14 @@ def iterate(
 
     * every state, the initial one included, is local-checkpointed
       lazily through session.checkpoint, so plan depth stays O(1) per
-      round and the query's release() frees every round;
+      round;
     * each round evaluates `witness` (aggregate Columns) in ONE
       `state.agg(*witness).collect()`, which also materializes the new
       checkpoint: no separate materialization job, and no witness for
       the initial state;
+    * once that collect has materialized round k, round k-1's
+      checkpoint is released, so a loop holds at most two: `step` must
+      read only its argument and loop invariants, never an older state;
     * the loop stops at the first round whose witness tuple repeats the
       previous round's, or after `max_rounds` rounds (None: unbounded).
       An equal witness must imply an unchanged state (a monotone count
@@ -64,9 +67,10 @@ def iterate(
     last = None
     rounds = 0
     while max_rounds is None or rounds < max_rounds:
-        state = checkpoint(step(state))
+        prev, state = state, checkpoint(step(state))
         rounds += 1
         cur = tuple(state.agg(*witness).collect()[0])
+        release_checkpoint(prev)
         if cur == last:
             break
         last = cur

@@ -14,7 +14,7 @@ brief's training-data-pipeline mandate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
@@ -27,6 +27,30 @@ from ..session import cached
 # One shared definition (sources/loader.wide_docs); local alias keeps
 # call sites short.
 _docs = wide_docs
+
+
+def md5_bucket(id_col: str = "doc_id", salt: str = "") -> Column:
+    """int(md5(salt || id)[:4], 16) % 100 — the 0..99 bucket every
+    deterministic split and sample keys on (content- and
+    order-independent; a salt makes the draw independent of the
+    unsalted split)."""
+    key = (
+        F.concat(F.lit(salt), F.col(id_col).cast("string"))
+        if salt
+        else F.col(id_col).cast("string")
+    )
+    return F.conv(F.substring(F.md5(key), 1, 4), 16, 10).cast("int") % 100
+
+
+def hash_split(id_col: str = "doc_id", train: int = 80, validation: int = 10) -> Column:
+    """'train' / 'validation' / 'test' by md5 bucket: x_hash_split's
+    assignment and CorpusPipeline.with_split's column."""
+    bucket = md5_bucket(id_col)
+    return (
+        F.when(bucket < train, "train")
+        .when(bucket < train + validation, "validation")
+        .otherwise("test")
+    )
 
 
 @register(
@@ -62,16 +86,8 @@ def x_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 is evaluated JVM-side in whole-stage codegen.
     """
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
-    )
     return (
-        docs.select(split.alias("split"), "doc_id", "n_chars")
+        docs.select(hash_split("doc_id").alias("split"), "doc_id", "n_chars")
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -131,12 +147,30 @@ def x_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tok) per row is cheaper at any scale. Thresholds are integer
     cross-multiplications — no float compares to drift between engines.
     """
-    docs = _docs(spark, sf_dir)
+    return (
+        repetition_flags(_docs(spark, sf_dir), ["lang"])
+        .groupBy("lang")
+        .agg(
+            F.sum(F.when(F.col("dropped"), 0).otherwise(1)).cast("bigint").alias("n_kept"),
+            F.sum(F.when(F.col("dropped"), 1).otherwise(0)).cast("bigint").alias("n_dropped"),
+            F.sum("max_cnt").cast("bigint").alias("sum_top_token"),
+            F.sum("n_tok").cast("bigint").alias("sum_tokens"),
+            F.sum("n_dup").cast("bigint").alias("sum_dup_bigrams"),
+            F.sum("n_bi").cast("bigint").alias("sum_bigrams"),
+        )
+        .orderBy("lang")
+    )
+
+
+def repetition_flags(docs: DataFrame, keep: list[str], text_col: str = "text") -> DataFrame:
+    """`keep` + (n_tok, max_cnt, n_bi, n_dup, dropped) per document — the
+    x_repetition_filter signals: `dropped` when the top token exceeds 30%
+    of tokens or the duplicate-bigram fraction exceeds 20%."""
     m = docs.select(
-        "lang",
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("toks"),
+        *keep,
+        F.expr(f"filter(split({text_col}, ' '), t -> t != '')").alias("toks"),
     ).select(
-        "lang",
+        *keep,
         F.size("toks").alias("n_tok"),
         F.expr(
             "array_max(transform(array_distinct(toks),"
@@ -152,8 +186,8 @@ def x_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.expr("array()"))
         .alias("bigrams"),
     )
-    f = m.select(
-        "lang",
+    return m.select(
+        *keep,
         "n_tok",
         "max_cnt",
         F.size("bigrams").alias("n_bi"),
@@ -163,17 +197,17 @@ def x_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("max_cnt") * 10 > F.col("n_tok") * 3)
         | (F.col("n_dup") * 5 > F.col("n_bi")),
     )
-    return (
-        f.groupBy("lang")
-        .agg(
-            F.sum(F.when(F.col("dropped"), 0).otherwise(1)).cast("bigint").alias("n_kept"),
-            F.sum(F.when(F.col("dropped"), 1).otherwise(0)).cast("bigint").alias("n_dropped"),
-            F.sum("max_cnt").cast("bigint").alias("sum_top_token"),
-            F.sum("n_tok").cast("bigint").alias("sum_tokens"),
-            F.sum("n_dup").cast("bigint").alias("sum_dup_bigrams"),
-            F.sum("n_bi").cast("bigint").alias("sum_bigrams"),
-        )
-        .orderBy("lang")
+
+
+EMAIL_RE = r"[a-z0-9]+@[a-z]+\.[a-z]+"
+PHONE_RE = r"[0-9]{3}-[0-9]+"
+
+
+def redacted(text_col: str) -> Column:
+    """The text with email and phone matches replaced by typed
+    placeholders (x_redact's expression)."""
+    return F.regexp_replace(
+        F.regexp_replace(text_col, EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
     )
 
 
@@ -218,8 +252,6 @@ def x_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     which mean the same thing in Java regex (Spark) and RE2 (DuckDB).
     """
     docs = _docs(spark, sf_dir)
-    email_re = r"[a-z0-9]+@[a-z]+\.[a-z]+"
-    phone_re = r"[0-9]{3}-[0-9]+"
     aug = docs.select(
         "lang",
         F.concat(
@@ -233,11 +265,9 @@ def x_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     red = aug.select(
         "lang",
         "text_aug",
-        F.regexp_replace(
-            F.regexp_replace("text_aug", email_re, "<EMAIL>"), phone_re, "<PHONE>"
-        ).alias("text_red"),
-        F.size(F.regexp_extract_all("text_aug", F.lit(email_re), F.lit(0))).alias("n_emails"),
-        F.size(F.regexp_extract_all("text_aug", F.lit(phone_re), F.lit(0))).alias("n_phones"),
+        redacted("text_aug").alias("text_red"),
+        F.size(F.regexp_extract_all("text_aug", F.lit(EMAIL_RE), F.lit(0))).alias("n_emails"),
+        F.size(F.regexp_extract_all("text_aug", F.lit(PHONE_RE), F.lit(0))).alias("n_phones"),
     )
     return (
         red.groupBy("lang")
@@ -250,6 +280,36 @@ def x_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
+
+
+PACK_WINDOW = 2048  # context-window tokens
+PACK_SHARDS = 8  # parallel packing streams per group
+
+
+def packed_bins(
+    docs: DataFrame,
+    keep: list[str],
+    by: list[str],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    window_tokens: int = PACK_WINDOW,
+    shards: int = PACK_SHARDS,
+) -> DataFrame:
+    """`keep` + (shard, n_tok, cum, bin): greedy packing in id order into
+    `window_tokens` windows, one stream per (`by`, shard = id % shards);
+    bin = preceding cumulative tokens div window."""
+    t = docs.select(
+        *keep,
+        (F.col(id_col) % shards).alias("shard"),
+        F.size(F.expr(f"filter(split({text_col}, ' '), x -> x != '')")).alias("n_tok"),
+    )
+    w = (
+        W.partitionBy(*by, "shard")
+        .orderBy(id_col)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    c = t.withColumn("cum", F.sum("n_tok").over(w))
+    return c.withColumn("bin", F.expr(f"(cum - n_tok) div {window_tokens}"))
 
 
 @register(
@@ -286,25 +346,9 @@ def x_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     At cluster scale shard count rises with executor count; the
     per-stream semantics are unchanged."""
     docs = _t(spark, sf_dir, "documents")
-    t = docs.select(
-        "lang",
-        "doc_id",
-        (F.col("doc_id") % 8).alias("shard"),
-        F.size(F.expr("filter(split(text, ' '), x -> x != '')")).alias("n_tok"),
-    )
-    w = (
-        W.partitionBy("lang", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    c = t.withColumn("cum", F.sum("n_tok").over(w))
     return (
-        c.select(
-            "lang",
-            "shard",
-            F.expr("(cum - n_tok) div 2048").alias("bin"),
-            "n_tok",
-        )
+        packed_bins(docs, ["lang", "doc_id"], ["lang"])
+        .select("lang", "shard", "bin", "n_tok")
         .groupBy("lang", "shard", "bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -358,39 +402,54 @@ def x_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only tokenization, a (lang, shard)-keyed partial agg collapsing
     the corpus to |langs|x8 rows, then a |langs|-row rollup — strictly
     cheaper than x_seq_packing itself since no window function runs."""
-    docs = _t(spark, sf_dir, "documents")
+    return padding_waste(_t(spark, sf_dir, "documents"), "lang").orderBy("lang")
+
+
+def padding_waste(
+    docs: DataFrame,
+    by: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    window_tokens: int = PACK_WINDOW,
+    shards: int = PACK_SHARDS,
+) -> DataFrame:
+    """Per `by` group: packing streams, tokens, windows, padding tokens
+    and fraction, and the windows owed to stream parallelism alone."""
     stream = (
         docs.select(
-            "lang",
-            (F.col("doc_id") % 8).alias("shard"),
-            F.size(F.expr("filter(split(text, ' '), x -> x != '')")).alias("n_tok"),
+            by,
+            (F.col(id_col) % shards).alias("shard"),
+            F.size(F.expr(f"filter(split({text_col}, ' '), x -> x != '')")).alias("n_tok"),
         )
-        .groupBy("lang", "shard")
+        .groupBy(by, "shard")
         .agg(F.sum("n_tok").alias("toks"))
     )
-    win = F.expr("(toks + 2047) div 2048")
-    agg = stream.groupBy("lang").agg(
+    win = F.expr(f"(toks + {window_tokens - 1}) div {window_tokens}")
+    agg = stream.groupBy(by).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_streams"),
         F.sum("toks").cast("bigint").alias("total_tokens"),
         F.sum(win).cast("bigint").alias("n_windows"),
     )
     return agg.select(
-        "lang",
+        by,
         "n_streams",
         "total_tokens",
         "n_windows",
-        (F.col("n_windows") * 2048 - F.col("total_tokens"))
+        (F.col("n_windows") * window_tokens - F.col("total_tokens"))
         .cast("bigint")
         .alias("padding_tokens"),
         F.round(
-            (F.col("n_windows") * 2048 - F.col("total_tokens")).cast("double")
-            / (F.col("n_windows") * 2048).cast("double"),
+            (F.col("n_windows") * window_tokens - F.col("total_tokens")).cast("double")
+            / (F.col("n_windows") * window_tokens).cast("double"),
             6,
         ).alias("padding_frac"),
-        (F.col("n_windows") - F.expr("(total_tokens + 2047) div 2048"))
+        (
+            F.col("n_windows")
+            - F.expr(f"(total_tokens + {window_tokens - 1}) div {window_tokens}")
+        )
         .cast("bigint")
         .alias("shard_overhead_windows"),
-    ).orderBy("lang")
+    )
 
 
 @register(
@@ -421,15 +480,7 @@ def x_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     property an eval-holdout pipeline needs. Map-only until the per-lang
     summary agg."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 4),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
-    s = docs.select("lang", "n_chars", bucket.alias("bucket"))
+    s = docs.select("lang", "n_chars", md5_bucket("doc_id", "strat:").alias("bucket"))
     return (
         s.groupBy("lang")
         .agg(
@@ -718,31 +769,50 @@ def x_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor). Reference parity: no such surface in the reference
     (pipeline mandate, SURVEY.md §2.10 X1/X4).
     """
-    docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - CONTAM_NGRAM + 1, F.lit(1))
+    sh = shingle_digests(_docs(spark, sf_dir))
+    return overlap_flags(
+        sh.filter(F.col("doc_id") % BENCH_MOD == 0),
+        sh.filter(F.col("doc_id") % BENCH_MOD != 0),
+    ).orderBy("doc_id")
+
+
+def shingle_digests(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    keep: tuple[str, ...] = (),
+    ngram: int = CONTAM_NGRAM,
+) -> DataFrame:
+    """(id, `keep`, sh_hash): each doc's distinct md5 digests of
+    overlapping `ngram`-word shingles over the unfiltered space split
+    (repeated spaces leave empty tokens inside shingles)."""
+    toks = F.split(text_col, " ")
+    n_sh = F.greatest(F.size(toks) - ngram + 1, F.lit(1))
     sh_arr = F.transform(
         F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, CONTAM_NGRAM))),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, ngram))),
     )
-    sh = (
-        docs.select("doc_id", F.explode(sh_arr).alias("sh_hash"))
-        .dropDuplicates(["doc_id", "sh_hash"])
+    return docs.select(id_col, *keep, F.explode(sh_arr).alias("sh_hash")).dropDuplicates(
+        [id_col, "sh_hash"]
     )
-    bench = (
-        sh.filter(F.col("doc_id") % BENCH_MOD == 0).select("sh_hash").distinct()
-    )
+
+
+def overlap_flags(
+    bench_sh: DataFrame, sh: DataFrame, id_col: str = "doc_id", min_overlap: int = CONTAM_MIN
+) -> DataFrame:
+    """(id, n_overlap, contaminated) for every doc of `sh` sharing any
+    digest with `bench_sh` (both shingle_digests frames); the benchmark
+    digest set broadcasts."""
+    bench = bench_sh.select("sh_hash").distinct()
     return (
-        sh.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), "sh_hash")
-        .groupBy("doc_id")
+        sh.join(F.broadcast(bench), "sh_hash")
+        .groupBy(id_col)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
         .select(
-            "doc_id",
+            id_col,
             "n_overlap",
-            (F.col("n_overlap") >= CONTAM_MIN).alias("contaminated"),
+            (F.col("n_overlap") >= min_overlap).alias("contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -993,6 +1063,32 @@ def x_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 WSAMPLE_K = 20  # weighted sample size per source
 
 
+def es_sample(
+    docs: DataFrame,
+    keep: list[str],
+    k: int,
+    weight_col: str,
+    group_col: str | None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """`keep` + (skey, rnk) for the k docs (per `group_col`, or overall
+    when None) with the largest Efraimidis-Spirakis keys ln(u)/w, u drawn
+    from the id's md5. An ungrouped draw funnels through one window
+    partition: fine for modest k."""
+    u = (
+        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 6), 16, 10)
+        .cast("bigint")
+        + 1
+    ) / F.lit(16777217.0)
+    keyed = docs.select(
+        *keep,
+        F.round(F.log(u) / F.col(weight_col), 12).alias("skey"),
+    )
+    part = W.partitionBy(group_col) if group_col else W.partitionBy()
+    w = part.orderBy(F.desc("skey"), id_col)
+    return keyed.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
 @register(
     "x_weighted_sample",
     tags=("EXT", "X4", "F3", "F4", "O3"),
@@ -1036,21 +1132,8 @@ def x_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform draw. Reference parity: no sampling surface in the
     reference (SURVEY.md §2.10 X4 mandate)."""
     docs = _t(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10)
-        .cast("bigint")
-        + 1
-    ) / F.lit(16777217.0)
-    keyed = docs.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.round(F.log(u) / F.col("n_chars"), 12).alias("skey"),
-    )
-    w = W.partitionBy("source").orderBy(F.desc("skey"), "doc_id")
     return (
-        keyed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= WSAMPLE_K)
+        es_sample(docs, ["doc_id", "source", "n_chars"], WSAMPLE_K, "n_chars", "source")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_kept"),
@@ -1171,35 +1254,47 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregable final agg. Snapshots stored as parquet diff
     identically — this is the plan either way."""
     docs = _t(spark, sf_dir, "documents")
-    snap_a = docs.filter(F.col("doc_id") % 20 != 7).select(
-        "doc_id", "lang", F.md5("text").alias("digest")
-    )
-    snap_b = docs.filter(F.col("doc_id") % 20 != 11).select(
-        "doc_id",
-        "lang",
-        F.md5(
-            F.when(F.col("doc_id") % 20 == 3, F.concat(F.col("text"), F.lit(" v2"))).otherwise(
-                F.col("text")
-            )
-        ).alias("digest"),
+    revised = F.when(
+        F.col("doc_id") % 20 == 3, F.concat(F.col("text"), F.lit(" v2"))
+    ).otherwise(F.col("text"))
+    return snapshot_diff(
+        docs.filter(F.col("doc_id") % 20 != 7),
+        docs.filter(F.col("doc_id") % 20 != 11),
+        ["lang"],
+        new_text=revised,
+    ).orderBy("lang", "change")
+
+
+def snapshot_diff(
+    old: DataFrame,
+    new: DataFrame,
+    by: list[str],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    new_text: Column | None = None,
+) -> DataFrame:
+    """(`by`, change, n, example_doc): added / removed / changed /
+    unchanged doc counts between two snapshots by md5 content digest
+    (`new_text` overrides the new side's text). Each side projects to
+    (id, `by`, digest) before the full-outer join: digests shuffle,
+    never bodies."""
+    snap_a = old.select(id_col, *by, F.md5(text_col).alias("digest"))
+    snap_b = new.select(
+        id_col, *by, F.md5(text_col if new_text is None else new_text).alias("digest")
     )
     a, b = snap_a.alias("a"), snap_b.alias("b")
-    diff = a.join(b, F.col("a.doc_id") == F.col("b.doc_id"), "full_outer").select(
-        F.coalesce(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id"),
-        F.coalesce(F.col("a.lang"), F.col("b.lang")).alias("lang"),
-        F.when(F.col("a.doc_id").isNull(), "added")
-        .when(F.col("b.doc_id").isNull(), "removed")
+    diff = a.join(b, F.col(f"a.{id_col}") == F.col(f"b.{id_col}"), "full_outer").select(
+        F.coalesce(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias(id_col),
+        *[F.coalesce(F.col(f"a.{c}"), F.col(f"b.{c}")).alias(c) for c in by],
+        F.when(F.col(f"a.{id_col}").isNull(), "added")
+        .when(F.col(f"b.{id_col}").isNull(), "removed")
         .when(F.col("a.digest") != F.col("b.digest"), "changed")
         .otherwise("unchanged")
         .alias("change"),
     )
-    return (
-        diff.groupBy("lang", "change")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_id").cast("bigint").alias("example_doc"),
-        )
-        .orderBy("lang", "change")
+    return diff.groupBy(*by, "change").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(id_col).cast("bigint").alias("example_doc"),
     )
 
 
@@ -1430,20 +1525,30 @@ def x_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no sampling surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline family."""
     docs = wide_docs(spark, sf_dir).select("lang")
-    lc = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    wcum = W.orderBy("lang").rowsBetween(W.unboundedPreceding, W.currentRow)
+    return temperature_weights(docs, "lang").orderBy("lang")
+
+
+def temperature_weights(docs: DataFrame, by: str, tau_sqrt: bool = True) -> DataFrame:
+    """(`by`, n_docs, base_ppm, weight_temp, boost): temperature-scaled
+    sampling weights per group, tau = 0.5 (sqrt) or, with
+    tau_sqrt=False, tau = 1 (the natural shares)."""
+    lc = docs.groupBy(by).agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    wcum = W.orderBy(by).rowsBetween(W.unboundedPreceding, W.currentRow)
+    s = F.col("n_docs").cast("double")
+    if tau_sqrt:
+        s = F.sqrt(s)
     w = lc.select(
-        "lang",
+        by,
         "n_docs",
         F.sum("n_docs").over(W.partitionBy()).cast("bigint").alias("n_total"),
-        F.sqrt(F.col("n_docs").cast("double")).alias("s"),
-        F.sum(F.sqrt(F.col("n_docs").cast("double"))).over(wcum).alias("cum"),
+        s.alias("s"),
+        F.sum(s).over(wcum).alias("cum"),
     )
     z = w.select(
-        "lang", "n_docs", "n_total", "s", F.max("cum").over(W.partitionBy()).alias("zsum")
+        by, "n_docs", "n_total", "s", F.max("cum").over(W.partitionBy()).alias("zsum")
     )
     return z.select(
-        "lang",
+        by,
         "n_docs",
         F.expr("CAST(n_docs * 1000000 div n_total AS BIGINT)").alias("base_ppm"),
         F.round(F.col("s") / F.col("zsum"), 6).alias("weight_temp"),
@@ -1453,7 +1558,7 @@ def x_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("zsum") * F.col("n_docs").cast("double")),
             6,
         ).alias("boost"),
-    ).orderBy("lang")
+    )
 
 
 TOKEN_BUDGET = 2_000_000  # target training tokens to allocate across sources
@@ -1523,33 +1628,48 @@ def x_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no planning surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline family."""
     docs = wide_docs(spark, sf_dir).select("source", "text")
-    n_tok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-    st = docs.groupBy("source").agg(F.sum(n_tok).cast("bigint").alias("tok"))
-    cap = TOKEN_BUDGET * BUDGET_CAP_PCT // 100
+    return token_allocation(docs, "source").orderBy("source")
+
+
+def token_allocation(
+    docs: DataFrame,
+    by: str,
+    budget: int = TOKEN_BUDGET,
+    cap_pct: int = BUDGET_CAP_PCT,
+    text_col: str = "text",
+) -> DataFrame:
+    """(`by`, tokens_avail, alloc_tokens, is_capped, fill_ppm): the
+    token budget split across `by` groups in proportion to their
+    nonempty-token counts, each capped at cap_pct% of the budget, the
+    capped surplus redistributed once among uncapped groups.
+    Integer-exact; never over budget."""
+    n_tok = F.size(F.filter(F.split(text_col, " "), lambda x: x != ""))
+    st = docs.groupBy(by).agg(F.sum(n_tok).cast("bigint").alias("tok"))
+    cap = budget * cap_pct // 100
     p1 = st.select(
-        "source",
+        by,
         "tok",
         F.sum("tok").over(W.partitionBy()).cast("bigint").alias("t_total"),
     ).select(
-        "source",
+        by,
         "tok",
-        F.expr(f"CAST({TOKEN_BUDGET} * tok div t_total AS BIGINT)").alias("want"),
+        F.expr(f"CAST({budget} * tok div t_total AS BIGINT)").alias("want"),
     )
     capped = p1.select(
-        "source",
+        by,
         "tok",
         "want",
         F.lit(cap).cast("bigint").alias("cap"),
         (F.col("want") > cap).alias("is_capped"),
     )
     p2 = capped.select(
-        "source",
+        by,
         "tok",
         "want",
         "cap",
         "is_capped",
         (
-            F.lit(TOKEN_BUDGET)
+            F.lit(budget)
             - F.sum(F.least("want", "cap")).over(W.partitionBy())
         )
         .cast("bigint")
@@ -1569,14 +1689,14 @@ def x_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cap"),
     ).cast("bigint")
     return p2.select(
-        "source",
+        by,
         F.col("tok").alias("tokens_avail"),
         alloc.alias("alloc_tokens"),
         "is_capped",
-        (alloc * 1_000_000 / F.lit(TOKEN_BUDGET))
+        (alloc * 1_000_000 / F.lit(budget))
         .cast("bigint")
         .alias("fill_ppm"),
-    ).orderBy("source")
+    )
 
 
 @register(
@@ -1797,28 +1917,40 @@ def x_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no sampling surface in the reference; SURVEY.md
     §2.10 X4 sharding/sampling family."""
     docs = _t(spark, sf_dir, "documents")
+    return (
+        group_sample(docs, ["lang", "source", "doc_id", "n_chars"], ["lang", "source"])
+        .select("lang", "source", "sample_rank", "doc_id", "n_chars")
+        .orderBy("lang", "source", "sample_rank")
+    )
+
+
+def group_sample(
+    docs: DataFrame,
+    keep: list[str],
+    by: list[str],
+    k: int = GROUP_SAMPLE_K,
+    id_col: str = "doc_id",
+    salt: str = "gsamp:",
+) -> DataFrame:
+    """`keep` + sample_rank (1..k) for the k smallest salted-md5 docs
+    of every `by` group; Catalyst plans the rank <= k filter as
+    WindowGroupLimit, so map tasks keep k-row heaps before the group
+    shuffle."""
     hv = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit("gsamp:"), F.col("doc_id").cast("string"))), 1, 8
+            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8
         ),
         16,
         10,
     ).cast("bigint")
     r = docs.select(
-        "lang",
-        "source",
-        "doc_id",
-        "n_chars",
+        *keep,
         F.row_number()
-        .over(W.partitionBy("lang", "source").orderBy(hv.asc(), F.col("doc_id").asc()))
+        .over(W.partitionBy(*by).orderBy(hv.asc(), F.col(id_col).asc()))
         .cast("bigint")
         .alias("sample_rank"),
     )
-    return (
-        r.filter(F.col("sample_rank") <= GROUP_SAMPLE_K)
-        .select("lang", "source", "sample_rank", "doc_id", "n_chars")
-        .orderBy("lang", "source", "sample_rank")
-    )
+    return r.filter(F.col("sample_rank") <= k)
 
 
 # --- round 6 additions -------------------------------------------------
@@ -1844,20 +1976,35 @@ def _luhn_sql(col: str) -> str:
     return f"(({' + '.join(terms)}) % 10 = 0)"
 
 
-def _luhn_spark(col: F.Column) -> F.Column:
-    """Spark twin of _luhn_sql — same 16-term integer tree. try_cast, not
-    cast: ANSI mode hard-fails casting the '' a no-match regexp_extract
-    yields, and when() conditions do not short-circuit — the NULL result
-    is then masked by the card <> '' conjunct at every call site."""
+def card_candidate(text_col: str) -> Column:
+    """The first card-shaped 16-digit run in the text, '' if none."""
+    return F.regexp_extract(text_col, r"[0-9]{16}", 0)
+
+
+def luhn_valid_card(card: Column) -> Column:
+    """A non-empty card_candidate passing the Luhn checksum: the Spark twin
+    of _luhn_sql, the same 16-term integer tree. try_cast, not cast: ANSI
+    mode hard-fails casting the '' a no-match regexp_extract yields, and
+    when() conditions do not short-circuit — the NULL result is then
+    masked by the card <> '' conjunct."""
     total = F.lit(0)
     for i in range(1, 17):
-        d = F.substring(col, i, 1).try_cast("bigint")
+        d = F.substring(card, i, 1).try_cast("bigint")
         if (16 - i) % 2 == 1:
             term = F.when(d * 2 > 9, d * 2 - 9).otherwise(d * 2)
         else:
             term = d
         total = total + term
-    return total % 10 == 0
+    return (card != "") & (total % 10 == 0)
+
+
+def ipv4_count(text_col: str) -> Column:
+    """Number of IPv4-shaped literals in the text."""
+    return F.size(
+        F.regexp_extract_all(
+            text_col, F.lit(r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"), F.lit(0)
+        )
+    )
 
 
 @register(
@@ -1905,7 +2052,7 @@ def x_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     validity then varies naturally with the digits), ~1/11 an IP.
 
     The Luhn check is 16 explicit integer terms (no loops, no floats)
-    evaluated identically on both engines — see _luhn_sql/_luhn_spark.
+    evaluated identically on both engines — see _luhn_sql/luhn_valid_card.
 
     100 TB design: map-only regex + integer expressions in whole-stage
     codegen, one partial-aggregable per-lang summary; no Python, no
@@ -1930,21 +2077,15 @@ def x_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = aug.select(
         "lang",
-        F.regexp_extract("text_aug", r"[0-9]{16}", 0).alias("card"),
-        F.size(
-            F.regexp_extract_all(
-                "text_aug", F.lit(r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"), F.lit(0)
-            )
-        ).alias("n_ips"),
+        card_candidate("text_aug").alias("card"),
+        ipv4_count("text_aug").alias("n_ips"),
     )
     return (
         hits.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.when(F.col("card") != "", 1).otherwise(0)).cast("bigint").alias("n_cards"),
-            F.sum(
-                F.when((F.col("card") != "") & _luhn_spark(F.col("card")), 1).otherwise(0)
-            )
+            F.sum(F.when(luhn_valid_card(F.col("card")), 1).otherwise(0))
             .cast("bigint")
             .alias("n_cards_luhn_valid"),
             F.sum("n_ips").cast("bigint").alias("n_ips"),
@@ -2016,33 +2157,13 @@ def x_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one doc-keyed partial-agg count over 16-byte digests; the LEFT
     join keeps zero-overlap docs so the denominator is every scanned
     doc, not just docs with hits."""
-    docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - CONTAM_NGRAM + 1, F.lit(1))
-    sh_arr = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, CONTAM_NGRAM))),
+    sh = shingle_digests(_docs(spark, sf_dir), keep=("lang",))
+    per_doc = overlap_counts(
+        sh.filter(F.col("doc_id") % BENCH_MOD == 0),
+        sh.filter(F.col("doc_id") % BENCH_MOD != 0),
+        ["doc_id", "lang"],
     )
-    sh = docs.select("doc_id", "lang", F.explode(sh_arr).alias("sh_hash")).dropDuplicates(
-        ["doc_id", "sh_hash"]
-    )
-    bench = (
-        sh.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select(F.col("sh_hash").alias("b_hash"))
-        .distinct()
-    )
-    per_doc = (
-        sh.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), F.col("sh_hash") == F.col("b_hash"), "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_total"),
-            F.sum(F.when(F.col("b_hash").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hit"),
-        )
-    )
-    frac = F.col("n_hit").cast("double") / F.col("n_total")
+    frac = overlap_fraction()
     return (
         per_doc.groupBy("lang")
         .agg(
@@ -2057,6 +2178,29 @@ def x_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
+
+
+def overlap_counts(bench_sh: DataFrame, sh: DataFrame, keys: list[str]) -> DataFrame:
+    """(`keys`, n_total, n_hit) for EVERY doc of `sh`: its distinct
+    shingle digests and how many of them `bench_sh` holds (both
+    shingle_digests frames; the benchmark digest set broadcasts)."""
+    bench = bench_sh.select(F.col("sh_hash").alias("b_hash")).distinct()
+    return (
+        sh.join(F.broadcast(bench), F.col("sh_hash") == F.col("b_hash"), "left")
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_total"),
+            F.sum(F.when(F.col("b_hash").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_hit"),
+        )
+    )
+
+
+def overlap_fraction() -> Column:
+    """n_hit / n_total over overlap_counts' columns: one int/int double
+    division."""
+    return F.col("n_hit").cast("double") / F.col("n_total")
 
 
 LEN_BUCKET_EDGES = (64, 128, 256, 512)  # token-count bucket boundaries
@@ -2111,8 +2255,14 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     (25 cells), one broadcast of a single row. The bucket CASE uses
     fixed literal edges so the scan stays a map stage — no range agg
     dependency like x_quantile_binning's."""
-    docs = _docs(spark, sf_dir)
-    n_tok = F.size(F.expr("filter(split(text, ' '), x -> x != '')"))
+    return length_mixture(_docs(spark, sf_dir), "lang").orderBy("lang", "bucket")
+
+
+def length_mixture(docs: DataFrame, by: str, text_col: str = "text") -> DataFrame:
+    """(`by`, bucket, n_docs, n_tokens, uniform_weight): the token-length
+    bucket x group histogram with the per-cell factor that equalizes
+    token mass across cells (> 1: underrepresented)."""
+    n_tok = F.size(F.expr(f"filter(split({text_col}, ' '), x -> x != '')"))
     e = LEN_BUCKET_EDGES
     bucket = (
         F.when(n_tok < e[0], "len_000")
@@ -2121,9 +2271,9 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(n_tok < e[3], "len_256")
         .otherwise("len_512")
     )
-    g = cached(  # 25 cells, read by both the total agg and the output
-        docs.select("lang", n_tok.alias("n_tok"), bucket.alias("bucket"))
-        .groupBy("lang", "bucket")
+    g = cached(  # few cells, read by both the total agg and the output
+        docs.select(by, n_tok.alias("n_tok"), bucket.alias("bucket"))
+        .groupBy(by, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("n_tokens"),
@@ -2133,19 +2283,15 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("bigint").alias("all_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
     )
-    return (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "bucket",
-            "n_docs",
-            "n_tokens",
-            F.round(
-                F.col("all_tokens").cast("double") / F.col("n_cells") / F.col("n_tokens"),
-                6,
-            ).alias("uniform_weight"),
-        )
-        .orderBy("lang", "bucket")
+    return g.crossJoin(F.broadcast(tot)).select(
+        by,
+        "bucket",
+        "n_docs",
+        "n_tokens",
+        F.round(
+            F.col("all_tokens").cast("double") / F.col("n_cells") / F.col("n_tokens"),
+            6,
+        ).alias("uniform_weight"),
     )
 
 
@@ -2225,51 +2371,8 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan is bucket-count-independent. Reference parity: no
     selection surface in the reference (SURVEY.md §2.10 X4 mandate).
     """
-    docs = _docs(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
-    )
-    bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-        % DSIR_BUCKETS
-    )
-    counts = cached(  # read twice: bucket stats and per-doc weights
-        tok.groupBy("doc_id", "lang", bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    buckets = counts.groupBy("bucket").agg(
-        F.sum(
-            F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("c")).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n_t"),
-        F.sum("c").cast("bigint").alias("n_r"),
-    )
-    totals = buckets.agg(
-        F.sum("n_t").cast("bigint").alias("t_tot"),
-        F.sum("n_r").cast("bigint").alias("r_tot"),
-    )
-    lr = buckets.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.round(
-            F.log(
-                ((F.col("n_t") + 1) * (F.col("r_tot") + DSIR_BUCKETS)).cast("double")
-                / ((F.col("n_r") + 1) * (F.col("t_tot") + DSIR_BUCKETS)).cast("double")
-            ),
-            6,
-        ).alias("lr"),
-    )
-    docw = (
-        counts.join(F.broadcast(lr), "bucket")
-        .select(
-            "doc_id",
-            "lang",
-            F.round(F.col("c").cast("double") * F.col("lr"), 6)
-            .cast("decimal(24,6)")
-            .alias("term"),
-        )
-        .groupBy("doc_id", "lang")
-        .agg(F.sum("term").alias("w"))
+    docw = dsir_doc_weights(
+        _docs(spark, sf_dir), "lang", F.col("lang") == DSIR_TARGET_LANG
     )
     return (
         docw.groupBy("lang")
@@ -2292,4 +2395,61 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("lang")
+    )
+
+
+def dsir_doc_weights(
+    docs: DataFrame,
+    key: str,
+    is_target: Column,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    buckets: int = DSIR_BUCKETS,
+) -> DataFrame:
+    """(id, `key`, w): each doc's DSIR importance weight, w = sum_b c_b *
+    ln(p_target(b) / p_raw(b)) over word unigrams hashed into `buckets`
+    buckets, Laplace +1 smoothed; w is an exact DECIMAL sum of 6-dp
+    terms. `is_target` marks target-domain rows over `key`."""
+    tok = docs.select(
+        id_col, key, F.explode(F.split(text_col, " ")).alias("tok")
+    )
+    bucket = (
+        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
+        % buckets
+    )
+    counts = cached(  # read twice: bucket stats and per-doc weights
+        tok.groupBy(id_col, key, bucket.alias("bucket"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    bstats = counts.groupBy("bucket").agg(
+        F.sum(F.when(is_target, F.col("c")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("n_t"),
+        F.sum("c").cast("bigint").alias("n_r"),
+    )
+    totals = bstats.agg(
+        F.sum("n_t").cast("bigint").alias("t_tot"),
+        F.sum("n_r").cast("bigint").alias("r_tot"),
+    )
+    lr = bstats.crossJoin(F.broadcast(totals)).select(
+        "bucket",
+        F.round(
+            F.log(
+                ((F.col("n_t") + 1) * (F.col("r_tot") + buckets)).cast("double")
+                / ((F.col("n_r") + 1) * (F.col("t_tot") + buckets)).cast("double")
+            ),
+            6,
+        ).alias("lr"),
+    )
+    return (
+        counts.join(F.broadcast(lr), "bucket")
+        .select(
+            id_col,
+            key,
+            F.round(F.col("c").cast("double") * F.col("lr"), 6)
+            .cast("decimal(24,6)")
+            .alias("term"),
+        )
+        .groupBy(id_col, key)
+        .agg(F.sum("term").alias("w"))
     )

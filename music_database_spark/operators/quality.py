@@ -16,7 +16,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.relational import _t
@@ -24,6 +24,7 @@ from ..registry import register
 from ..sources.loader import scan_wide
 from .ranking import two_level_rank
 from ..session import cached
+from .pipeline import md5_bucket
 
 # (column, kind) pairs profiled over orders; kind picks the min/max
 # string rendering that is bit-identical across Spark and DuckDB.
@@ -260,22 +261,38 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere. Reference parity: no such surface in the reference
     (SURVEY.md §2.10 X4 mandate).
     """
-    docs = _t(spark, sf_dir, "documents")
+    return ngram_lm_nll(_t(spark, sf_dir, "documents")).orderBy("doc_id")
+
+
+def ngram_lm_nll(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    train: DataFrame | None = None,
+) -> DataFrame:
+    """(id, n_bigrams, nll) per scored doc with >= 2 tokens: the
+    add-one bigram LM's mean negative log-likelihood. With train=None
+    the md5 train split (bucket < LM_TRAIN_BUCKET) trains and the other
+    buckets are scored; otherwise `train` (same text column) trains and
+    every doc of `docs` is scored."""
     # has2 = ">= 2 nonempty tokens" precomputed as a raw-text regex so
     # the bigram branches never filter on size(ts) — which would inline
     # the token HOF into an interpreted Predicate (round-9 HOF-in-Filter
     # lint class, tools/planaudit.py lint (c)).
-    toks = docs.select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("int")
-            % 100
-        ).alias("bucket"),
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("ts"),
-        F.col("text").rlike("[^ ] +[^ ]").alias("has2"),
-    )
-    train = toks.filter(F.col("bucket") < LM_TRAIN_BUCKET)
+    def tokens(d: DataFrame, *cols) -> DataFrame:
+        return d.select(
+            *cols,
+            F.expr(f"filter(split({text_col}, ' '), t -> t != '')").alias("ts"),
+            F.col(text_col).rlike("[^ ] +[^ ]").alias("has2"),
+        )
+
+    if train is None:
+        toks = tokens(docs, id_col, md5_bucket(id_col).alias("bucket"))
+        train = toks.filter(F.col("bucket") < LM_TRAIN_BUCKET)
+        scored_docs = toks.filter((F.col("bucket") >= LM_TRAIN_BUCKET) & F.col("has2"))
+    else:
+        train = tokens(train)
+        scored_docs = tokens(docs, id_col).filter("has2")
     uni = (
         train.select(F.explode("ts").alias("w"))
         .groupBy("w")
@@ -294,9 +311,8 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c2"))
     )
     eval_big = (
-        toks.filter((F.col("bucket") >= LM_TRAIN_BUCKET) & F.col("has2"))
-        .select("doc_id", F.explode(bigrams).alias("b"))
-        .select("doc_id", "b.w1", "b.w2")
+        scored_docs.select(id_col, F.explode(bigrams).alias("b"))
+        .select(id_col, "b.w1", "b.w2")
     )
     scored = (
         eval_big.join(big, ["w1", "w2"], "left")
@@ -305,7 +321,7 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(F.broadcast(vocab))
         .select(
-            "doc_id",
+            id_col,
             (
                 F.log(F.coalesce(F.col("c2"), F.lit(0)) + 1)
                 - F.log(F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))
@@ -313,13 +329,13 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        scored.groupBy("doc_id")
+        scored.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.sort_array(F.collect_list("lp")).alias("lps"),
         )
         .select(
-            "doc_id",
+            id_col,
             "n_bigrams",
             F.round(
                 -F.aggregate("lps", F.lit(0.0), lambda acc, x: acc + x)
@@ -327,7 +343,6 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("nll"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1891,6 +1906,39 @@ GOPHER_STOP_MIN = 2  # min distinct stopwords present
 GOPHER_STOPS = ("the", "a", "of", "and", "to", "in", "is", "that")
 
 
+def gopher_metrics(docs: DataFrame, keep: list[str], text_col: str = "text") -> DataFrame:
+    """`keep` + (n_words, mean_word_len, alpha_frac, n_stops) per doc
+    over its nonempty space-split words, in one scan of HOF array
+    expressions."""
+    words = F.expr(f"filter(split({text_col}, ' '), x -> x != '')")
+    n_words = F.size(words)
+    denom = F.greatest(n_words, F.lit(1))
+    mean_wl = F.length(F.concat_ws("", words)).cast("double") / denom
+    alpha_words = f"filter(filter(split({text_col}, ' '), x -> x != ''), x -> x rlike '[a-z]')"
+    alpha_frac = F.size(F.expr(alpha_words)).cast("double") / denom
+    stops = F.array(*[F.lit(s) for s in GOPHER_STOPS])
+    n_stops = F.size(F.filter(stops, lambda s: F.array_contains(words, s)))
+    return docs.select(
+        *keep,
+        n_words.alias("n_words"),
+        mean_wl.alias("mean_word_len"),
+        alpha_frac.alias("alpha_frac"),
+        n_stops.alias("n_stops"),
+    )
+
+
+def gopher_fails() -> tuple[Column, Column, Column, Column]:
+    """(word count, mean word length, alpha fraction, stopwords) rule
+    failures over gopher_metrics' columns."""
+    fail_wc = (F.col("n_words") < GOPHER_MIN_WORDS) | (F.col("n_words") > GOPHER_MAX_WORDS)
+    fail_mwl = (F.col("mean_word_len") < GOPHER_MWL_LO) | (
+        F.col("mean_word_len") > GOPHER_MWL_HI
+    )
+    fail_af = F.col("alpha_frac") < GOPHER_ALPHA_MIN
+    fail_st = F.col("n_stops") < GOPHER_STOP_MIN
+    return fail_wc, fail_mwl, fail_af, fail_st
+
+
 @register(
     "x_gopher_rules",
     tags=("EXT", "X4", "F5", "A1"),
@@ -1951,30 +1999,8 @@ def x_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible shape for a 6-rule audit; rules are CONJUNCTIVE columns,
     not separate passes."""
     docs = scan_wide(spark, sf_dir, "documents", ["lang", "text"])
-    words = F.expr("filter(split(text, ' '), x -> x != '')")
-    n_words = F.size(words)
-    denom = F.greatest(n_words, F.lit(1))
-    mean_wl = F.length(F.concat_ws("", words)).cast("double") / denom
-    alpha_frac = (
-        F.size(F.expr("filter(filter(split(text, ' '), x -> x != ''), x -> x rlike '[a-z]')"))
-        .cast("double")
-        / denom
-    )
-    stops = F.array(*[F.lit(s) for s in GOPHER_STOPS])
-    n_stops = F.size(F.filter(stops, lambda s: F.array_contains(words, s)))
-    m = docs.select(
-        "lang",
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        alpha_frac.alias("alpha_frac"),
-        n_stops.alias("n_stops"),
-    )
-    fail_wc = (F.col("n_words") < GOPHER_MIN_WORDS) | (F.col("n_words") > GOPHER_MAX_WORDS)
-    fail_mwl = (F.col("mean_word_len") < GOPHER_MWL_LO) | (
-        F.col("mean_word_len") > GOPHER_MWL_HI
-    )
-    fail_af = F.col("alpha_frac") < GOPHER_ALPHA_MIN
-    fail_st = F.col("n_stops") < GOPHER_STOP_MIN
+    m = gopher_metrics(docs, ["lang"])
+    fail_wc, fail_mwl, fail_af, fail_st = gopher_fails()
     return (
         m.groupBy("lang")
         .agg(

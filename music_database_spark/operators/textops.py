@@ -551,15 +551,28 @@ def bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     query term — the shared scoring core of x_bm25_search (which ranks
     its top-k) and x_ndcg (whose ideal ordering needs all matching
     docs). n_terms doubles as the graded relevance label."""
-    docs = _t(spark, sf_dir, "documents")
+    return bm25_scores(_t(spark, sf_dir, "documents"))
+
+
+def bm25_scores(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    terms: list[str] | None = None,
+    k1: str | float = BM25_K1,
+    b: str | float = BM25_B,
+) -> DataFrame:
+    """(id, n_terms, score) for every doc matching >= 1 query term. With
+    terms=None the query is the BM25_NQ highest collection-frequency
+    terms whose document frequency lies in [5%, 50%] of the docs."""
     tok = docs.select(
-        "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), t -> t != '')")).alias("term"),
+        id_col,
+        F.explode(F.expr(f"filter(split({text_col}, ' '), t -> t != '')")).alias("term"),
     )
-    tf = tok.groupBy("doc_id", "term").agg(
+    tf = tok.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
+    dl = tf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
     nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     avgdl = dl.crossJoin(F.broadcast(nd)).agg(
         (F.sum("dl").cast("double") / F.first("n").cast("double")).alias("avgdl")
@@ -568,38 +581,41 @@ def bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("df"),
         F.sum("tf").cast("bigint").alias("cf"),
     )
-    qterms = (
-        stats.crossJoin(F.broadcast(nd))
-        .filter((F.col("df") * 20 >= F.col("n")) & (F.col("df") * 2 <= F.col("n")))
-        .orderBy(F.desc("cf"), "term")
-        .limit(BM25_NQ)
-        .select("term", "df")
-    )
+    if terms is None:
+        qterms = (
+            stats.crossJoin(F.broadcast(nd))
+            .filter((F.col("df") * 20 >= F.col("n")) & (F.col("df") * 2 <= F.col("n")))
+            .orderBy(F.desc("cf"), "term")
+            .limit(BM25_NQ)
+            .select("term", "df")
+        )
+    else:
+        qterms = stats.filter(F.col("term").isin(list(terms))).select("term", "df")
     scored = (
         tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
+        .join(dl, id_col)
         .crossJoin(F.broadcast(nd))
         .crossJoin(F.broadcast(avgdl))
         .select(
-            "doc_id",
+            id_col,
             (
                 F.log(
                     (F.col("n").cast("double") - F.col("df").cast("double") + 0.5)
                     / (F.col("df").cast("double") + 0.5)
                     + 1.0
                 )
-                * (F.col("tf").cast("double") * F.expr(f"{BM25_K1} + 1.0"))
+                * (F.col("tf").cast("double") * F.expr(f"{k1} + 1.0"))
                 / (
                     F.col("tf").cast("double")
                     + F.expr(
-                        f"{BM25_K1} * (1.0 - {BM25_B}"
-                        f" + {BM25_B} * CAST(dl AS DOUBLE) / avgdl)"
+                        f"{k1} * (1.0 - {b}"
+                        f" + {b} * CAST(dl AS DOUBLE) / avgdl)"
                     )
                 )
             ).alias("s"),
         )
     )
-    per_doc = scored.groupBy("doc_id").agg(
+    return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
         F.round(
             F.aggregate(
@@ -610,7 +626,17 @@ def bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    return per_doc
+
+
+def bm25_top(per_doc: DataFrame, top_k: int, id_col: str = "doc_id") -> DataFrame:
+    """The top_k rows of bm25_scores by (score DESC, id), with rnk."""
+    w = W.orderBy(F.desc("score"), id_col)
+    return (
+        per_doc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= top_k)
+        .select(id_col, "n_terms", "score", "rnk")
+        .orderBy("rnk")
+    )
 
 
 # The BM25 CTE chain (tok..per_doc) shared by the x_bm25_search and
@@ -697,14 +723,7 @@ def x_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes with x_tfidf (per-doc top terms) and x_knn (dense
     retrieval) as the hybrid-retrieval pair. Reference parity: no
     search surface in the reference (SURVEY.md §2.10 X4 mandate)."""
-    per_doc = bm25_per_doc(spark, sf_dir)
-    w = W.orderBy(F.desc("score"), "doc_id")
-    return (
-        per_doc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= BM25_TOPK)
-        .select("doc_id", "n_terms", "score", "rnk")
-        .orderBy("rnk")
-    )
+    return bm25_top(bm25_per_doc(spark, sf_dir), BM25_TOPK)
 
 
 BPE_MERGES = 3  # trained merge rules, unrolled identically in the oracle

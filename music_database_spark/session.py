@@ -158,6 +158,18 @@ def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     return ck
 
 
+def release_checkpoint(ck: DataFrame) -> None:
+    """Unpersist one frame ``checkpoint`` returned, without blocking,
+    and drop it from the registry. Only once nothing still to be
+    consumed reads it: it has no lineage to recompute from."""
+    rdd_id = ck._jdf.queryExecution().analyzed().rdd().id()
+    for i, held in enumerate(_HELD):
+        if not isinstance(held, DataFrame) and held.id() == rdd_id:
+            del _HELD[i]
+            held.unpersist(False)
+            return
+
+
 def release() -> None:
     """Unpersist everything ``cached`` and ``checkpoint`` registered
     since the last call, without blocking, and empty the registry.

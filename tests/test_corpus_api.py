@@ -582,3 +582,93 @@ def test_contamination_fraction_irregular_whitespace_matches_hand_shingles(spark
     # the double-spaced doc is a full hit, its single-spaced variant is not
     assert out[0]["overlap_frac"] == 1.0
     assert out[1]["overlap_frac"] < 1.0
+
+
+def test_redact_matches_registered_query(spark, docs):
+    """redact over x_redact's injected text must reproduce that query's
+    per-lang redacted length."""
+    from music_database_spark.corpus import CorpusPipeline
+    from music_database_spark.registry import load_all
+
+    aug = docs.select(
+        "doc_id",
+        "lang",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or call 555-01"),
+            (F.col("doc_id") % 100).cast("string"),
+        ).alias("text"),
+    )
+    api = {
+        r["lang"]: r["n"]
+        for r in CorpusPipeline(aug)
+        .redact()
+        .groupBy("lang")
+        .agg(F.sum(F.length("text_redacted")).cast("bigint").alias("n"))
+        .collect()
+    }
+    reg = {
+        r["lang"]: r["sum_len_after"]
+        for r in load_all()["x_redact"].build(spark, SF_SMOKE).collect()
+    }
+    assert api == reg and len(reg) > 0
+
+
+def test_bm25_matches_registered_search(spark, docs, pipe):
+    """bm25 given x_bm25_search's data-derived term set (the BM25_NQ
+    highest collection-frequency terms with df in [5%, 50%] of docs)
+    returns that query's ranked rows."""
+    from music_database_spark.operators.textops import BM25_NQ, BM25_TOPK
+    from music_database_spark.registry import load_all
+
+    n = docs.count()
+    tf = (
+        docs.select(
+            "doc_id",
+            F.explode(F.expr("filter(split(text, ' '), t -> t != '')")).alias("term"),
+        )
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    terms = [
+        r["term"]
+        for r in tf.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+        .filter((F.col("df") * 20 >= n) & (F.col("df") * 2 <= n))
+        .orderBy(F.desc("cf"), "term")
+        .limit(BM25_NQ)
+        .collect()
+    ]
+    assert 0 < len(terms) <= BM25_NQ
+    api = [tuple(r) for r in pipe.bm25(terms, top_k=BM25_TOPK).collect()]
+    reg = [tuple(r) for r in load_all()["x_bm25_search"].build(spark, SF_SMOKE).collect()]
+    assert api == reg and len(reg) > 0
+
+
+def test_pack_sequences_matches_registered_packing(spark, docs):
+    """pack_sequences at x_seq_packing's window (2048) and shard count (8),
+    run per lang (the registered query packs per (lang, shard) stream),
+    returns that query's bins."""
+    from music_database_spark.corpus import CorpusPipeline
+    from music_database_spark.registry import load_all
+
+    reg = {
+        (r["lang"], r["shard"], r["bin"]): (r["n_docs"], r["n_tokens"])
+        for r in load_all()["x_seq_packing"].build(spark, SF_SMOKE).collect()
+    }
+    langs = sorted({lang for lang, _, _ in reg})
+    api = {}
+    for lang in langs:
+        packed = CorpusPipeline(docs.filter(F.col("lang") == lang)).pack_sequences(
+            window_tokens=2048, shards=8
+        )
+        n_tok = F.size(F.expr("filter(split(text, ' '), x -> x != '')"))
+        for r in (
+            packed.groupBy("shard", "bin")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum(n_tok).cast("bigint").alias("t"))
+            .collect()
+        ):
+            api[(lang, r["shard"], r["bin"])] = (r["n"], r["t"])
+    assert api == reg and len(reg) > 0

@@ -45,3 +45,16 @@ def test_iterate_starts_one_job_per_round(spark):
             sc.setJobGroup(None, None)
         assert rounds == cap
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == rounds
+
+
+def test_iterate_holds_at_most_two_rounds(spark):
+    from music_database_spark import session
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    state, rounds = iterate(_one_row(spark), _plus_one, [F.sum("x")], 5)
+    held = set(sc._jsc.getPersistentRDDs().keySet()) - before
+    assert rounds == 5
+    assert len(held) <= 2
+    assert [r.x for r in state.collect()] == [5]
+    session.release()

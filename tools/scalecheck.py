@@ -329,13 +329,10 @@ def prefixjoin_growth(ks: list[int]) -> None:
     candidate:verified ratio (how many candidates the rare-prefix
     postings admit per true pair) should stay ~flat as K grows, and
     wall-clock should track candidates, not corpus^2."""
-    import re as _re
-
     spark = get_spark("scalecheck")
     base = load_table(spark, SF_DIR, "documents")
     cores = spark.sparkContext.defaultParallelism
-    from music_database_spark.operators.dedup import SHINGLE_LEN, shingles
-    from pyspark.sql import Window as W
+    from music_database_spark.operators.dedup import prefix_candidates, prefix_verify, shingles
 
     print(f"{'K':>3} {'docs':>7} {'sec':>7} {'candidates':>10} {'verified':>9} {'cand/true':>9}")
     for k in ks:
@@ -345,47 +342,9 @@ def prefixjoin_growth(ks: list[int]) -> None:
         sh = docs.select(
             "doc_id", F.explode(shingles(F.col("text"))).alias("shingle")
         ).persist()
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        ranked = (
-            sh.join(dfreq, "shingle")
-            .join(sizes, "doc_id")
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    W.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("shingle"))
-                ),
-            )
-        )
-        pfx = ranked.filter(
-            F.col("rk") <= F.col("n") - F.floor((F.col("n") + 1) / 2) + 1
-        ).select("doc_id", "shingle", "n")
-        cand = (
-            pfx.alias("a")
-            .join(
-                pfx.alias("b"),
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (3 * F.least(F.col("a.n"), F.col("b.n")) >= F.col("a.n") + F.col("b.n")),
-            )
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                F.col("a.n").alias("n_a"),
-                F.col("b.n").alias("n_b"),
-            )
-            .distinct()
-            .persist()
-        )
+        cand = prefix_candidates(sh).persist()
         n_cand = cand.count()
-        sets = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh"))
-        pairs = (
-            cand.join(sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-            .join(sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint"))
-            .filter(3 * F.col("inter") >= F.col("n_a") + F.col("n_b"))
-        )
-        n_true = pairs.count()
+        n_true = prefix_verify(sh, cand).count()
         dt = time.time() - t0
         print(
             f"{k:>3} {docs.count():>7} {dt:>7.2f} {n_cand:>10} {n_true:>9} "
