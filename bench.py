@@ -15,10 +15,18 @@ BENCH_FULL_c<C>.json the final line names (the driver benches at two
 core counts, and each run keeps its own file); a subset run writes
 BENCH_SUBSET.json instead.
 
-Protocol (BASELINE.md §2): per query, 1 warm-up execution then
-BENCH_RUNS timed executions (default 3), median recorded. Execution is
-measured with the noop sink so the number is plan execution, not
-driver-transfer of result rows.
+Protocol (BASELINE.md §2): per query, ``runtime.run`` makes one cold
+execution then BENCH_RUNS timed warm executions (default 3), the warm
+median recorded in ``queries`` and the cold run in ``cold_queries``.
+Every table's schema is inferred before the first query, so the cold
+number is plan compile plus every persist materialization: the cost a
+fresh session pays once per job (x_winnow_candidates once benched 1.09 s
+warm with a 93 s cold first build, a class warm medians never show).
+The cold run's Spark jobs, stages, tasks and executed-plan Exchange
+count are recorded in the ``jobs``, ``stages``, ``tasks`` and
+``plan_exchanges`` maps, and on each query's stderr line:
+
+    python bench.py x_pagerank x_bfs     # counts for a few queries
 
 Host-noise self-adjudication (round 11): the r10 driver recording
 drifted a uniform 1.31x on a contended host and needed a judge to
@@ -44,7 +52,9 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 from music_database_spark.registry import load_all  # noqa: E402
-from music_database_spark.session import get_spark, release  # noqa: E402
+from music_database_spark.runtime import run  # noqa: E402
+from music_database_spark.session import get_spark  # noqa: E402
+from music_database_spark.sources.loader import DRIVER_TABLES, table_schema  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
@@ -59,6 +69,9 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 0))
 # contended host and needed a judge to adjudicate it — these fields make
 # the artifact carry its own adjudication.
 HOST_NOISE_FRAC = 0.10
+
+# Per-query maps of the record, from each query's cold run
+COUNTS = ("jobs", "stages", "tasks", "plan_exchanges")
 
 
 def sf_from_dir(sf_dir: str) -> float:
@@ -188,27 +201,6 @@ def foreign_cpu_fraction(
     return min(1.0, foreign / capacity), min(1.0, steal / capacity)
 
 
-def time_query(build, spark, sf_dir: str) -> tuple[float, float]:
-    """(warm median, cold first run). The warm-up run IS the cold number:
-    with the cache released before each query, run 0 pays plan compile +
-    every persist materialization — the cost a fresh cluster session
-    (the only kind a real job gets) pays once per job. Recording it
-    closed a real blind spot: x_winnow_candidates benched 1.09 s warm
-    while its cold first build was 93 s (the round-9 inferred-filter
-    bug, PLANS.md) — a class per-session medians can never show."""
-    times = []
-    cold = 0.0
-    for i in range(RUNS + 1):
-        t0 = time.time()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if i == 0:
-            cold = dt
-        else:
-            times.append(dt)
-    return statistics.median(times), cold
-
-
 def main() -> int:
     names = sys.argv[1:]
     registry = load_all()
@@ -216,30 +208,33 @@ def main() -> int:
         n: s for n, s in registry.items() if (n in names if names else s.bench)
     }
     spark = get_spark("bench")
+    # Infer every table's schema before the first query, so no query's
+    # cold run carries its tables' inference jobs in its time or counts.
+    for t in DRIVER_TABLES:
+        if os.path.exists(os.path.join(SF_DIR, f"{t}.parquet")):
+            table_schema(spark, SF_DIR, t)
     results: dict[str, float] = {}
     colds: dict[str, float] = {}
+    counts: dict[str, dict[str, int]] = {k: {} for k in COUNTS}
     host_busy: dict[str, float] = {}
     host_steal: dict[str, float] = {}
     loadavg_start = round(os.getloadavg()[0], 2)
     for name, spec in sorted(todo.items()):
         snap = (time.time(), _host_busy_jiffies(), _host_steal_jiffies(), _tree_cpu_snapshot())
         try:
-            med, cold = time_query(spec.build, spark, SF_DIR)
-            results[name] = round(med, 3)
-            colds[name] = round(cold, 3)
+            rec = run(spark, name, spec.build, SF_DIR, RUNS)
+            results[name] = round(statistics.median(rec["warm_s"]), 3)
+            colds[name] = round(rec["cold_s"], 3)
+            for k in COUNTS:
+                counts[k][name] = rec[k]
         except Exception as e:  # a broken query must not kill the whole bench
             print(f"# bench error {name}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
             results[name] = -1.0
         host_busy[name], host_steal[name] = (
             round(v, 3) for v in foreign_cpu_fraction(*snap)
         )
-        # Operators cache and checkpoint intermediate frames (shingle
-        # sets, LSH signatures, loop states) reused *within* one
-        # execution; releasing them between queries keeps each number
-        # order-independent (runs of the SAME query still share the
-        # persist inside time_query).
-        release()
-        print(f"# {name}: {results[name]}s", file=sys.stderr)
+        line = "".join(f" {k}={counts[k][name]}" for k in COUNTS if name in counts[k])
+        print(f"# {name}: {results[name]}s{line}", file=sys.stderr)
     # Flag pathological cold/warm ratios loudly: a first build >=10x its
     # warm median on a non-trivial query is the inferred-filter bug class
     # (plan-level double compute that the logical-plan cache then hides).
@@ -287,6 +282,7 @@ def main() -> int:
         "unit": "sec",
         "queries": results,
         "cold_queries": colds,
+        **counts,
         "host_busy": host_busy,
         "host_steal": host_steal,
         "host_noise": host_noise,

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from music_database_spark.operators.graph import iterate
+from music_database_spark.runtime import job_group
 
 
 def _one_row(spark):
@@ -35,16 +36,11 @@ def test_iterate_returns_max_rounds_when_cap_binds(spark):
 
 
 def test_iterate_starts_one_job_per_round(spark):
-    sc = spark.sparkContext
     for cap in (2, 5):
-        group = f"iterate_jobs_{cap}"
-        sc.setJobGroup(group, group)
-        try:
+        with job_group(spark, f"iterate_jobs_{cap}") as n:
             _state, rounds = iterate(_one_row(spark), _plus_one, [F.sum("x")], cap)
-        finally:
-            sc.setJobGroup(None, None)
         assert rounds == cap
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == rounds
+        assert n["jobs"] == rounds
 
 
 def test_iterate_holds_at_most_two_rounds(spark):

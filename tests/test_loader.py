@@ -11,21 +11,18 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+from music_database_spark.runtime import job_group
 from music_database_spark.sources.loader import DRIVER_TABLES, load_table, table_schema
 from tests.conftest import SF_SMOKE as SF
-
-
-def _jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def test_second_load_of_every_table_starts_no_job(spark):
     for t in DRIVER_TABLES:
         load_table(spark, SF, t)
-    j0 = _jobs(spark)
-    for t in DRIVER_TABLES:
-        load_table(spark, SF, t)
-    assert _jobs(spark) - j0 == 0
+    with job_group(spark, "second_load") as n:
+        for t in DRIVER_TABLES:
+            load_table(spark, SF, t)
+    assert n["jobs"] == 0
 
 
 def test_memoized_schema_is_the_inferred_one(spark):
@@ -37,19 +34,19 @@ def test_memoized_schema_is_the_inferred_one(spark):
 def test_rewritten_file_is_inferred_again(spark, tmp_path):
     d = str(tmp_path)
     shutil.copy(f"{SF}/nation.parquet", f"{d}/nation.parquet")
-    j0 = _jobs(spark)
-    load_table(spark, d, "nation")
-    assert _jobs(spark) - j0 == 1
-    j0 = _jobs(spark)
-    load_table(spark, d, "nation")
-    assert _jobs(spark) - j0 == 0
+    with job_group(spark, "first_load") as n:
+        load_table(spark, d, "nation")
+    assert n["jobs"] == 1
+    with job_group(spark, "memo_load") as n:
+        load_table(spark, d, "nation")
+    assert n["jobs"] == 0
     # rewrite the file with one more column: new size and mtime
     tbl = pq.read_table(f"{d}/nation.parquet")
     tbl = tbl.append_column("n_extra", pa.array([1] * tbl.num_rows, pa.int64()))
     pq.write_table(tbl, f"{d}/nation.parquet")
-    j0 = _jobs(spark)
-    df = load_table(spark, d, "nation")
-    assert _jobs(spark) - j0 == 1
+    with job_group(spark, "rewritten_load") as n:
+        df = load_table(spark, d, "nation")
+    assert n["jobs"] == 1
     assert "n_extra" in df.columns
     assert df.filter(F.col("n_extra") == 1).count() == tbl.num_rows
 

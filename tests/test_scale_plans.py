@@ -717,11 +717,11 @@ def test_boundary_sample_is_bounded_and_countless(spark):
     # frame — the former dedicated count job is gone. AQE may split the
     # totals aggregate into a stage-job, so the bound is <=3 (the old
     # path's floor was 4: count + sample + totals' >=2).
-    sc = spark.sparkContext
-    sc.setJobGroup("rk14", "rank build")
-    ranked = two_level_rank(df, ["v", "id"])
-    sc.setJobGroup(None, None)
-    build_jobs = len(sc.statusTracker().getJobIdsForGroup("rk14"))
+    from music_database_spark.runtime import job_group
+
+    with job_group(spark, "rk14") as counts:
+        ranked = two_level_rank(df, ["v", "id"])
+    build_jobs = counts["jobs"]
     assert build_jobs <= 3, f"count job is back: {build_jobs} build jobs"
     assert ranked.count() == n
 

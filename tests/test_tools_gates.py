@@ -409,7 +409,7 @@ def test_plan_exchanges_stops_at_a_cached_subplan(spark):
     subplan's Exchange, which the run reads but does not execute."""
     from pyspark.sql import functions as F
 
-    from jobcount import plan_exchanges
+    from music_database_spark.runtime import plan_exchanges
 
     inner = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().persist()
     try:

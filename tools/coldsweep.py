@@ -63,7 +63,8 @@ def run_family(module: str) -> None:
     """Child-process mode: fresh session, warm the JVM on a trivial job,
     then time each family query's FIRST (and only) build."""
     from music_database_spark.registry import load_all
-    from music_database_spark.session import get_spark, release
+    from music_database_spark.runtime import run
+    from music_database_spark.session import get_spark
 
     reg = load_all()
     names = [n for n, s in reg.items() if s.bench and s.build.__module__ == module]
@@ -88,25 +89,22 @@ def run_family(module: str) -> None:
     # the sweep should attribute).
     from pyspark.sql import functions as F
 
-    (
-        spark.read.parquet(os.path.join(SF_DIR, "nation.parquet"))
-        .select(F.md5(F.col("n_name")).alias("h"), "n_regionkey")
-        .groupBy("n_regionkey")
-        .agg(F.count(F.lit(1)).alias("n"), F.max("h").alias("m"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    def warmup(spark, sf_dir):
+        return (
+            spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+            .select(F.md5(F.col("n_name")).alias("h"), "n_regionkey")
+            .groupBy("n_regionkey")
+            .agg(F.count(F.lit(1)).alias("n"), F.max("h").alias("m"))
+        )
+
+    run(spark, "coldsweep_warmup", warmup, SF_DIR, warm=0)
     out: dict[str, float] = {}
     for n in names:
-        t0 = time.time()
         try:
-            reg[n].build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            out[n] = round(time.time() - t0, 3)
+            out[n] = round(run(spark, n, reg[n].build, SF_DIR, warm=0)["cold_s"], 3)
         except Exception as e:  # recorded, not fatal — the sweep must finish
             print(f"# ERROR {n}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
             out[n] = -1.0
-        release()
     print(json.dumps(out))
 
 

@@ -1,19 +1,24 @@
-"""Scale-growth experiment: replicate the documents corpus K times (ids
-offset, text salted so replicas are not trivial exact dups) and measure
-how the near-dup candidate pipelines grow. Linear-ish wall-clock growth
-and bounded candidate counts are the evidence that the banded/capped
-designs hold under scale-up. Usage:
+"""Scale-growth experiments: replicate the driver tables K times (keys
+offset; documents text-salted so replicas are near-dups, not trivial
+exact dups) and measure how the registered queries and the capped
+operator stages grow. Linear-ish wall-clock growth and bounded
+candidate counts are the evidence that the banded/capped designs hold
+under scale-up. Usage:
 
-    python tools/scalecheck.py [K ...]      # default 1 2 4 10
+    python tools/scalecheck.py [--heavy] 1 2 4   # registered queries' slopes
     python tools/scalecheck.py --components 16 64 256   # CC round counts
 
-Prints one line per (K, query): docs, seconds, output rows.
+and one mode per operator stage (--incremental, --winnow, --novelty,
+--prefixjoin, --spans, --basket, --linkpred, --dsir, --padding; K
+defaults to 1 2 4 10). Each mode drops what it cached and checkpointed
+with one ``session.release()`` per K step.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import statistics
 import sys
 import time
 
@@ -22,7 +27,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
-from music_database_spark.session import get_spark  # noqa: E402
+from music_database_spark.session import cached, get_spark, release  # noqa: E402
 from music_database_spark.sources.loader import load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -49,10 +54,16 @@ def replicate(docs: DataFrame, k: int) -> DataFrame:
 
 # --- heavy-family scaling exponents (round-8 verdict ask #8) -------------
 
-# One representative per expensive plan family, with the tables its scan
-# actually reads. K-replication materializes real parquet (same layout
-# for every K, I/O included) so the exponent measures the whole job.
+# One representative per expensive plan family, plus the corpus-stage and
+# relational shapes, with the tables its scan actually reads.
+# K-replication materializes real parquet (same layout for every K, I/O
+# included) so the exponent measures the whole job.
 HEAVY: tuple[tuple[str, tuple[str, ...]], ...] = (
+    ("x_dedup_exact", ("documents",)),         # md5-keyed window dedup
+    ("x_dedup_minhash", ("documents",)),       # banded LSH candidates
+    ("x_repetition_filter", ("documents",)),   # map-only quality flags
+    ("x_pipe_syntax", ("lineitem",)),          # TPC-H Q1 scan-agg
+    ("j_large_large", ("lineitem", "orders")), # lineitem⋈orders + agg
     ("x_dedup_minhash_md5", ("documents",)),   # banded dedup + verify
     ("x_dedup_embedding_det", ("documents",)), # sparse-BOW LSH + cosine verify
     ("x_span_mask", ("documents",)),           # k-gram position index + islands
@@ -103,19 +114,22 @@ def _replicated_table(spark, t: str, k: int) -> DataFrame:
 
 
 def heavy_growth(ks: list[int]) -> None:
-    """Measured sf0.1 -> K x sf0.1 scaling exponents for the heaviest
-    plan families:
+    """Measured sf0.1 -> K x sf0.1 scaling exponents for the registered
+    queries in HEAVY:
 
         python tools/scalecheck.py --heavy 1 2 4
 
     For each query, K-replicated inputs are materialized to
     .tmp/heavy_k{K}/ (identical parquet layout for every K, so K=1 is
-    measured through the same path), the query runs warm-up + 2 timed
-    noop-sink executions (median), and the exponent is
-    ln(t_Kmax / t_1) / ln(Kmax). Slope ~1.0 = linear scaling; anything
-    materially above ~1.3 earns a plan note in PLANS.md."""
+    measured through the same path), ``runtime.run`` makes one cold and
+    2 warm noop-sink executions (their median is the time), and the
+    exponent is ln(t_Kmax / t_1) / ln(Kmax). Slope ~1.0 = linear
+    scaling; anything materially above ~1.3 earns a plan note in
+    PLANS.md."""
     import math
     import shutil
+
+    from music_database_spark.runtime import run
 
     if len(ks) < 2 or ks[-1] == ks[0]:
         raise SystemExit(
@@ -173,90 +187,14 @@ def heavy_growth(ks: list[int]) -> None:
         times = []
         for k in ks:
             sf_dir = os.path.join(REPO, ".tmp", f"heavy_{base_tag}_k{k}")
-            runs = []
-            for i in range(3):  # 1 warm-up + 2 timed
-                t0 = time.time()
-                reg[name].build(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                if i > 0:
-                    runs.append(time.time() - t0)
-            times.append(sorted(runs)[len(runs) // 2])
-            spark.catalog.clearCache()
+            rec = run(spark, name, reg[name].build, sf_dir, warm=2)
+            times.append(statistics.median(rec["warm_s"]))
         slope = math.log(times[-1] / times[0]) / math.log(ks[-1] / ks[0])
         print(
             f"{name:<24} "
             + " ".join(f"{t:8.2f}" for t in times)
             + f"  {slope:5.2f}"
         )
-
-
-def main() -> int:
-    args = [
-        a
-        for a in sys.argv[1:]
-        if not a.startswith("--only=")
-        and a not in ("--tpch", "--incremental", "--components", "--winnow", "--novelty", "--prefixjoin", "--spans", "--basket", "--linkpred", "--dsir", "--padding", "--heavy", "--force")
-    ]
-    ks = [int(a) for a in args] or [1, 2, 4, 10]
-    if "--heavy" in sys.argv[1:]:
-        heavy_growth(ks)
-        return 0
-    if "--tpch" in sys.argv[1:]:
-        tpch_growth(ks)
-        return 0
-    if "--incremental" in sys.argv[1:]:
-        incremental_growth(ks)
-        return 0
-    if "--components" in sys.argv[1:]:
-        components_growth(ks)
-        return 0
-    if "--winnow" in sys.argv[1:]:
-        winnow_growth(ks)
-        return 0
-    if "--dsir" in sys.argv[1:]:
-        dsir_growth(ks)
-        return 0
-    if "--padding" in sys.argv[1:]:
-        padding_growth(ks)
-        return 0
-    if "--spans" in sys.argv[1:]:
-        span_growth(ks)
-        return 0
-    if "--basket" in sys.argv[1:]:
-        basket_growth(ks)
-        return 0
-    if "--linkpred" in sys.argv[1:]:
-        linkpred_growth(ks)
-        return 0
-    if "--novelty" in sys.argv[1:]:
-        novelty_growth(ks)
-        return 0
-    if "--prefixjoin" in sys.argv[1:]:
-        prefixjoin_growth(ks)
-        return 0
-    spark = get_spark("scalecheck")
-    base = load_table(spark, SF_DIR, "documents")
-
-    from music_database_spark.corpus import CorpusPipeline
-
-    print(f"{'K':>3} {'docs':>7} {'query':<22} {'sec':>7} {'rows':>8}")
-    for k in ks:
-        docs = replicate(base, k).persist()
-        n = docs.count()
-        for name, frame in [
-            ("exact_dedup", lambda d: CorpusPipeline(d).exact_dedup()),
-            ("near_dup_pairs", lambda d: CorpusPipeline(d).near_dup_pairs(0.6)),
-            ("quality_flags", lambda d: CorpusPipeline(d).with_quality_flags()),
-        ]:
-            t0 = time.time()
-            rows = frame(docs).count()
-            dt = time.time() - t0
-            print(f"{k:>3} {n:>7} {name:<22} {dt:>7.2f} {rows:>8}")
-        docs.unpersist()
-        spark.catalog.clearCache()
-    return 0
-
 
 
 def novelty_growth(ks: list[int]) -> None:
@@ -287,10 +225,10 @@ def novelty_growth(ks: list[int]) -> None:
         f"{'base_nov':>9} {'replica_nov':>11}"
     )
     for k in ks:
-        docs = replicate(base, k).repartition(cores).persist()
+        docs = cached(replicate(base, k).repartition(cores))
         docs.count()
         t0 = time.time()
-        per_doc = novelty_per_doc(docs).persist()
+        per_doc = cached(novelty_per_doc(docs))
         stats = (
             per_doc.groupBy((F.col("id") < n_base).alias("is_base"))
             .agg(
@@ -311,9 +249,7 @@ def novelty_growth(ks: list[int]) -> None:
             f"{k:>3} {docs.count():>7} {dt:>7.2f} {idx:>12} "
             f"{by.get(True, 0):>9.4f} {by.get(False, float('nan')):>11.4f}"
         )
-        per_doc.unpersist()
-        docs.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def prefixjoin_growth(ks: list[int]) -> None:
@@ -336,13 +272,11 @@ def prefixjoin_growth(ks: list[int]) -> None:
 
     print(f"{'K':>3} {'docs':>7} {'sec':>7} {'candidates':>10} {'verified':>9} {'cand/true':>9}")
     for k in ks:
-        docs = replicate(base, k).repartition(cores).persist()
+        docs = cached(replicate(base, k).repartition(cores))
         docs.count()
         t0 = time.time()
-        sh = docs.select(
-            "doc_id", F.explode(shingles(F.col("text"))).alias("shingle")
-        ).persist()
-        cand = prefix_candidates(sh).persist()
+        sh = cached(docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("shingle")))
+        cand = cached(prefix_candidates(sh))
         n_cand = cand.count()
         n_true = prefix_verify(sh, cand).count()
         dt = time.time() - t0
@@ -350,10 +284,7 @@ def prefixjoin_growth(ks: list[int]) -> None:
             f"{k:>3} {docs.count():>7} {dt:>7.2f} {n_cand:>10} {n_true:>9} "
             f"{(n_cand / max(n_true, 1)):>9.2f}"
         )
-        cand.unpersist()
-        sh.unpersist()
-        docs.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def winnow_growth(ks: list[int]) -> None:
@@ -389,7 +320,7 @@ def winnow_growth(ks: list[int]) -> None:
         # — without this the whole experiment single-threads (the exact
         # local bottleneck sources/loader.scan_wide exists to fix; a
         # cluster reading 100 TB gets its parallelism from file splits)
-        docs = replicate(base, k).repartition(cores).persist()
+        docs = cached(replicate(base, k).repartition(cores))
         docs.count()
         pipe = CorpusPipeline(docs)
         fps = pipe.winnow_fingerprints().select(
@@ -429,8 +360,7 @@ def winnow_growth(ks: list[int]) -> None:
             f"{k:>3} {docs.count():>7} {n_fps:>9} {n_fps / windows:>8.3f} {hot_pct:>8.1f} "
             f"{cand_dt:>8.2f} {cand:>10} {cont_dt:>8.2f} {cont:>10}"
         )
-        docs.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def dsir_growth(ks: list[int]) -> None:
@@ -455,11 +385,11 @@ def dsir_growth(ks: list[int]) -> None:
         f"{'sec':>7} {'sel_frac':>9} {'avg_w_en':>9}"
     )
     for k in ks:
-        docs = replicate(base, k).repartition(cores).persist()
+        docs = cached(replicate(base, k).repartition(cores))
         docs.count()
         pipe = CorpusPipeline(docs)
         t0 = time.time()
-        w = pipe.dsir_weights(F.col("lang") == "en").persist()
+        w = cached(pipe.dsir_weights(F.col("lang") == "en"))
         n_docs = w.count()
         dt = time.time() - t0
         sel = w.filter(F.col("dsir_weight") > 0).count()
@@ -482,9 +412,7 @@ def dsir_growth(ks: list[int]) -> None:
             f"{k:>3} {n_docs:>7} {index_rows:>10} {bucket_rows:>11} "
             f"{dt:>7.2f} {sel / n_docs:>9.3f} {avg_en:>9.4f}"
         )
-        w.unpersist()
-        docs.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def padding_growth(shards_list: list[int]) -> None:
@@ -503,7 +431,7 @@ def padding_growth(shards_list: list[int]) -> None:
     from music_database_spark.corpus import CorpusPipeline
 
     spark = get_spark("scalecheck")
-    base = load_table(spark, SF_DIR, "documents").persist()
+    base = cached(load_table(spark, SF_DIR, "documents"))
     base.count()
     pipe = CorpusPipeline(base)
     print(
@@ -524,7 +452,7 @@ def padding_growth(shards_list: list[int]) -> None:
             f"{s:>6} {streams:>8} {wins:>8} {over:>9} "
             f"{pad:>10} {pad / (wins * 2048):>9.4f} {dt:>7.2f}"
         )
-    base.unpersist()
+    release()
 
 
 def span_growth(ks: list[int]) -> None:
@@ -547,7 +475,7 @@ def span_growth(ks: list[int]) -> None:
     cores = spark.sparkContext.defaultParallelism
     print(f"{'K':>3} {'docs':>7} {'hot_kg%':>8} {'sec':>7} {'span_rows':>10} {'masked_docs':>11}")
     for k in ks:
-        docs = replicate(base, k).repartition(cores).persist()
+        docs = cached(replicate(base, k).repartition(cores))
         docs.count()
         # hot-k-gram mass the cap drops (same probe as --winnow's)
         kg = docs.selectExpr(
@@ -564,16 +492,14 @@ def span_growth(ks: list[int]) -> None:
         )
         hot_pct = 100.0 * hot["hot"] / hot["tot"] if hot["tot"] else 0.0
         t0 = time.time()
-        runs = substring_span_runs(docs).persist()
+        runs = cached(substring_span_runs(docs))
         n_rows = runs.count()
         dt = time.time() - t0
         from music_database_spark.operators.spans import mask_budget_from_runs
 
         masked = mask_budget_from_runs(runs).count()
         print(f"{k:>3} {docs.count():>7} {hot_pct:>8.1f} {dt:>7.2f} {n_rows:>10} {masked:>11}")
-        runs.unpersist()
-        docs.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def components_growth(ks: list[int]) -> None:
@@ -605,6 +531,7 @@ def components_growth(ks: list[int]) -> None:
             dt = time.time() - t0
             ok = got == {i: 0 for i in range(n)}
             print(f"{n:>8} {name:<12} {rounds:>6} {dt:>7.2f} {str(ok):>3}")
+        release()
 
 
 def incremental_growth(ks: list[int]) -> None:
@@ -640,8 +567,7 @@ def incremental_growth(ks: list[int]) -> None:
         )
 
     docs0 = load_table(spark, SF_DIR, "documents")
-    batch_docs = docs0.filter(F.col("doc_id") % 10 == 9).persist()
-    n_batch = batch_docs.count()
+    batch = docs0.filter(F.col("doc_id") % 10 == 9)
     index_base = docs0.filter(F.col("doc_id") % 10 != 9)
     tmp = os.path.join(REPO, ".tmp", "inc_band_growth")
     shutil.rmtree(tmp, ignore_errors=True)
@@ -651,9 +577,11 @@ def incremental_growth(ks: list[int]) -> None:
         idx_docs = replicate(index_base, k)
         sh_path = os.path.join(tmp, f"sh_k{k}")
         band_path = os.path.join(tmp, f"bands_k{k}")
+        batch_docs = cached(batch)
+        n_batch = batch_docs.count()
         # Index build (amortized across many ingests in production): the
         # persisted shingle-set + capped band tables.
-        shset_i = shingle_frame(idx_docs, "doc_id", "text").persist()
+        shset_i = cached(shingle_frame(idx_docs, "doc_id", "text"))
         n_idx = shset_i.count()
         shset_i.write.mode("overwrite").parquet(sh_path)
         from pyspark.sql import Window as W
@@ -667,14 +595,12 @@ def incremental_growth(ks: list[int]) -> None:
             .write.mode("overwrite")
             .parquet(band_path)
         )
-        shset_i.unpersist()
-        spark.catalog.clearCache()
 
         # Per-ingest measurement: shingle+hash the BATCH ONLY, probe the
         # index at rest, verify candidates. This is the recurring cost.
         w0, r0 = shuffle_totals()
         t0 = time.time()
-        shset_b = shingle_frame(batch_docs, "doc_id", "text").persist()
+        shset_b = cached(shingle_frame(batch_docs, "doc_id", "text"))
         bands_b = md5_band_frame(shset_b)
         idx = spark.read.parquet(band_path)
         # The batch side is broadcast EXPLICITLY: an ingest batch is small
@@ -713,61 +639,13 @@ def incremental_growth(ks: list[int]) -> None:
         pairs = ver.count()
         dt = time.time() - t0
         w1, r1 = shuffle_totals()
-        shset_b.unpersist()
-        spark.catalog.clearCache()
+        release()
         print(
             f"{k:>3} {n_idx:>9} {n_batch:>6} {dt:>7.2f} "
             f"{(w1 - w0) / 1e6:>9.2f} {(r1 - r0) / 1e6:>9.2f} {pairs:>7}"
         )
     shutil.rmtree(tmp, ignore_errors=True)
 
-
-def tpch_growth(ks: list[int]) -> None:
-    """Relational-side growth: replicate lineitem/orders K times (keys
-    offset so join fan-out per key is unchanged) and time the
-    scan-agg (TPC-H Q1 shape) and large-join-agg shapes."""
-    spark = get_spark("scalecheck_tpch")
-    li0 = load_table(spark, SF_DIR, "lineitem")
-    o0 = load_table(spark, SF_DIR, "orders")
-    max_ok = o0.agg(F.max("o_orderkey")).collect()[0][0] + 1
-
-    def rep(df: DataFrame, key_cols: list[str], k: int) -> DataFrame:
-        out = df
-        for r in range(1, k):
-            shifted = df
-            for c in key_cols:
-                shifted = shifted.withColumn(c, F.col(c) + r * max_ok)
-            out = out.unionByName(shifted)
-        return out
-
-    print(f"{'K':>3} {'rows':>9} {'query':<18} {'sec':>7}")
-    for k in ks:
-        li = rep(li0, ["l_orderkey"], k).persist()
-        o = rep(o0, ["o_orderkey"], k).persist()
-        n = li.count()
-        o.count()
-        for name, build in [
-            (
-                "q1_scan_agg",
-                lambda: li.groupBy("l_returnflag", "l_linestatus").agg(
-                    F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("q"),
-                    F.count(F.lit(1)).alias("n"),
-                ),
-            ),
-            (
-                "join_agg",
-                lambda: li.join(o, li.l_orderkey == o.o_orderkey)
-                .groupBy("o_orderpriority")
-                .agg(F.count(F.lit(1)).alias("n")),
-            ),
-        ]:
-            t0 = time.time()
-            build().write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            print(f"{k:>3} {n:>9} {name:<18} {dt:>7.2f}")
-        li.unpersist()
-        o.unpersist()
-        spark.catalog.clearCache()
 
 def basket_growth(ks: list[int]) -> None:
     """Association-rule candidate growth: replicate lineitem K times with
@@ -792,10 +670,8 @@ def basket_growth(ks: list[int]) -> None:
             li = li.unionByName(
                 li0.withColumn("l_orderkey", F.col("l_orderkey") + r * max_ok)
             )
-        items = (
-            li.select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pk"))
-            .distinct()
-            .persist()
+        items = cached(
+            li.select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pk")).distinct()
         )
         n_items = items.count()
         n_baskets = items.select("okey").distinct().count()
@@ -805,14 +681,13 @@ def basket_growth(ks: list[int]) -> None:
         n_freq_items = freq_pk.count()
         freq = items.join(F.broadcast(freq_pk), "pk").select("okey", "pk")
         a, b = freq.alias("a"), freq.alias("b")
-        pairs = (
+        pairs = cached(
             a.join(
                 b,
                 (F.col("a.okey") == F.col("b.okey")) & (F.col("a.pk") < F.col("b.pk")),
             )
             .groupBy(F.col("a.pk").alias("pa"), F.col("b.pk").alias("pb"))
             .agg(F.count(F.lit(1)).alias("n_ab"))
-            .persist()
         )
         n_cand = pairs.agg(F.sum("n_ab")).collect()[0][0] or 0
         n_freq_pairs = pairs.filter(F.col("n_ab") >= MIN_SUPP).count()
@@ -821,9 +696,7 @@ def basket_growth(ks: list[int]) -> None:
             f"{k:>3} {n_baskets:>8} {n_items:>9} {n_freq_items:>10}"
             f" {n_cand:>10} {n_freq_pairs:>10} {dt:>7.2f}"
         )
-        pairs.unpersist()
-        items.unpersist()
-        spark.catalog.clearCache()
+        release()
 
 
 def linkpred_growth(ks: list[int]) -> None:
@@ -841,12 +714,9 @@ def linkpred_growth(ks: list[int]) -> None:
     from music_database_spark.operators.graph import LP_MAX_PART_FREQ
 
     spark = get_spark("scalecheck_linkpred")
-    ps0 = (
-        load_table(spark, SF_DIR, "lineitem")
-        .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .persist()
-    )
+    ps0 = load_table(spark, SF_DIR, "lineitem").select(
+        F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
+    ).distinct()
     row0 = ps0.agg(F.max("s").alias("ms"), F.max("p").alias("mp")).collect()[0]
     max_s, max_p = row0["ms"] + 1, row0["mp"] + 1
 
@@ -861,10 +731,10 @@ def linkpred_growth(ks: list[int]) -> None:
             if mode == "growth":
                 rep = rep.withColumn("p", F.col("p") + r * max_p)
             ps = ps.unionByName(rep)
-        ps = ps.persist()
+        ps = cached(ps)
         n_inc = ps.count()
         n_sup = ps.select("s").distinct().count()
-        freq = ps.groupBy("p").agg(F.count(F.lit(1)).alias("f")).persist()
+        freq = cached(ps.groupBy("p").agg(F.count(F.lit(1)).alias("f")))
         prof = freq.agg(
             F.count(F.lit(1)).alias("parts"),
             F.sum(F.col("f") * (F.col("f") - 1) / 2).alias("uncap"),
@@ -892,9 +762,33 @@ def linkpred_growth(ks: list[int]) -> None:
             f" {prof['kept']:>7} {int(prof['uncap']):>12} {int(prof['cap']):>10}"
             f" {n_pairs:>9} {dt:>7.2f}"
         )
-        freq.unpersist()
-        ps.unpersist()
-    ps0.unpersist()
+        release()
+
+
+MODES = {
+    "--heavy": heavy_growth,
+    "--incremental": incremental_growth,
+    "--components": components_growth,
+    "--winnow": winnow_growth,
+    "--novelty": novelty_growth,
+    "--prefixjoin": prefixjoin_growth,
+    "--spans": span_growth,
+    "--basket": basket_growth,
+    "--linkpred": linkpred_growth,
+    "--dsir": dsir_growth,
+    "--padding": padding_growth,
+}
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    flags = [a for a in args if a.startswith("--")]
+    unknown = [f for f in flags if f not in MODES and f != "--force" and not f.startswith("--only=")]
+    if unknown:
+        raise SystemExit(f"unknown options {unknown}; modes: {' '.join(MODES)}")
+    mode = next((MODES[f] for f in flags if f in MODES), heavy_growth)
+    mode([int(a) for a in args if not a.startswith("--")] or [1, 2, 4, 10])
+    return 0
 
 
 if __name__ == "__main__":
