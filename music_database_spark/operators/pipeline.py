@@ -592,11 +592,7 @@ def x_corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("max_cnt") * 10 <= F.col("n_tok") * 3)
         & (F.col("n_dup") * 5 <= F.greatest(F.col("n_bi"), F.lit(0)))
     ).select("doc_id", "lang", "n_tok")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = md5_bucket("doc_id")
     s = q.select(
         F.when(bucket < 80, "train")
         .when(bucket < 90, "validation")
@@ -1362,11 +1358,7 @@ def x_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x_quantile_sample's sampled order statistics).
     """
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = md5_bucket("doc_id")
     lab = (
         docs.select(F.col("n_chars").alias("v"), bucket.alias("bucket"))
         .filter(F.col("bucket") < 90)
@@ -1765,11 +1757,7 @@ def x_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no statistics surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline-monitoring family."""
     docs = wide_docs(spark, sf_dir).select("doc_id", "n_chars")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = md5_bucket("doc_id")
     lab = docs.select(
         F.col("n_chars").alias("v"), bucket.alias("bucket")
     ).filter(F.col("bucket") < 90).select(

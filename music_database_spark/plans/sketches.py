@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from .relational import _t
 from ..functions.vector import as_double_array, dot
+from ..operators.pipeline import md5_bucket
 from ..sources.loader import scan_wide
 from ..session import cached
 
@@ -862,12 +863,7 @@ def x_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     as x_distinct_kmv (at most k rows per split forwarded per
     partition); all set algebra then happens on two 128-row frames."""
     docs = _t(spark, sf_dir, "documents")
-    split = F.when(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("int")
-        % 100
-        < 80,
-        "train",
-    ).otherwise("heldout")
+    split = F.when(md5_bucket("doc_id") < 80, "train").otherwise("heldout")
     arr = F.split("text", " ")
     # cached: the distinct trigram inventory feeds the sketch side (hs)
     # AND the exact side — without the persist the pushed-down split

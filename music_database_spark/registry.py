@@ -43,7 +43,7 @@ class QuerySpec:
     # Non-None declares the query's OUTPUT legitimately depends on the
     # physical layout of its input (a layout probe, or an order-sensitive
     # sketch estimator) — the string is the documented WHY. Consumed by
-    # tools/layoutcheck.py: exempt queries must still run on the
+    # `tools/diffcheck.py --layout`: exempt queries must still run on the
     # scrambled copy but are not compared across layouts. Declared here,
     # on the registration, so a new order-sensitive query cannot be
     # exempted by editing tool code or prose (round-9 verdict ask #7);

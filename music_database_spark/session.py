@@ -92,6 +92,8 @@ def get_spark(
         # a built session sizes shuffles explicitly, not by the 200 rule
         "spark.sql.shuffle.partitions": str(shuffle_partitions or 32),
         "spark.ui.enabled": "false",
+        # a progress bar on stderr would split the harnesses' own lines
+        "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         **(extra_conf or {}),
     }

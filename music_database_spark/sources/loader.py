@@ -189,7 +189,7 @@ def source_content_tag(sf_dir: str, tables: list[str] | None = None) -> str:
     """12-hex content-identity tag of source parquet tables, THE keying
     convention for every DERIVED on-disk cache under .tmp (persisted ANN
     index, synthesized CSV fixture, bucketed warehouse, scalecheck heavy
-    replicas, variantcheck datasets). Fingerprints each table's file
+    replicas, diffcheck's variant and layout datasets). Fingerprints each table's file
     stats — relative name, size, mtime_ns, file- or directory-shaped —
     so a regenerated drop at the same path, or a DIFFERENT dataset at a
     same-named path, always produces a fresh cache key instead of

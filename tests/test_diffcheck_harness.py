@@ -8,6 +8,9 @@ Two layers of defense, both tested here:
    float divergence fails value comparison locally.
 2. audit_oracle_types() DESCRIBEs every oracle and flags HUGEINT /
    UHUGEINT / DECIMAL output columns before values are even compared.
+
+Also tested here: compare(), the one check every sweep dataset goes
+through, and that a sweep releases each query's caches and checkpoints.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ import pandas as pd
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
 
-from diffcheck import audit_oracle_types, normalize  # noqa: E402
+from diffcheck import audit_oracle_types, compare, normalize, sweep  # noqa: E402
 
 
 def test_normalize_distinguishes_int_from_float_zero():
@@ -101,3 +104,29 @@ def test_every_registered_oracle_is_type_clean():
         if risky:
             bad[name] = risky
     assert bad == {}, bad
+
+
+def test_compare_passes_equal_results_in_any_row_order():
+    a = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.5]})
+    assert compare(a, a.iloc[::-1]) is None
+
+
+def test_compare_names_each_kind_of_mismatch():
+    a = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.5]})
+    assert compare(a, a.rename(columns={"v": "w"})) == "columns ['k', 'v'] vs ['k', 'w']"
+    assert compare(a, a.head(1)) == "rowcount 2 vs 1"
+    why = compare(a, a.assign(v=[0.5, 2.5]))
+    assert why.startswith("1 differing rows of 2\n")
+    assert "'v': '1.5'" in why and "'v': '2.5'" in why
+
+
+def test_reference_sweep_releases_after_every_query(spark):
+    """x_ks_test caches and x_pagerank checkpoints its loop rounds; the
+    sweep releases both after each run, on either side."""
+    from music_database_spark.session import release
+    from tests.conftest import SF_SMOKE
+
+    spark.catalog.clearCache()  # what other tests left
+    release()
+    assert sweep(spark, SF_SMOKE, ["x_ks_test", "x_pagerank"], reference=SF_SMOKE) == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

@@ -91,3 +91,8 @@ def test_entry_queries_tune_the_session_they_are_given(spark):
     with pinned_conf(spark, {"spark.sql.session.timeZone": LA}):
         __spark_entry__.queries()["q1_singles_by_artist"](spark, SF).collect()
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_get_spark_turns_the_console_progress_bar_off(spark):
+    # a bar on stderr would split a harness's per-query lines
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"

@@ -353,7 +353,7 @@ def test_layout_exemptions_live_on_the_registry():
     its membership is pinned: adding a new order-sensitive query to the
     exempt set requires changing BOTH the registration and this test —
     it cannot be done by editing tool code or prose."""
-    import layoutcheck
+    import diffcheck
     from music_database_spark.registry import load_all
 
     declared = {
@@ -368,7 +368,7 @@ def test_layout_exemptions_live_on_the_registry():
     # each carries a documented why, and names its invariant twin or probe
     assert all(len(why) > 40 for why in declared.values())
     # the tool consumes exactly the registry's declarations
-    assert layoutcheck.exempt_queries() == declared
+    assert diffcheck.exempt_queries() == declared
     # every exemption is a rows-only query: an oracle-checked query can
     # never be layout-exempt (its hash check would be flaky by admission)
     reg = load_all()

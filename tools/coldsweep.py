@@ -68,10 +68,7 @@ def run_family(module: str) -> None:
 
     reg = load_all()
     names = [n for n, s in reg.items() if s.bench and s.build.__module__ == module]
-    spark = get_spark(
-        f"coldsweep_{module.rsplit('.', 1)[-1]}",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(f"coldsweep_{module.rsplit('.', 1)[-1]}")
     # Session warm-up: pays JVM JIT bring-up, Arrow init, one parquet
     # footer read and one Python-worker fork — none of it specific to
     # any query's plan, all of it noise we don't want attributed to the
