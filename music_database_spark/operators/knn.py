@@ -44,6 +44,7 @@ from ..sources.loader import scan_wide, wide_emb
 # call sites short.
 _emb = wide_emb
 from ..registry import register
+from .pipeline import hash_split
 from ..session import cached
 
 N_PROBES = 10  # fixed probe set: the N lowest vec_ids
@@ -998,14 +999,7 @@ def x_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential index-order fold over the mean arrays keeps both
     engines' doubles bit-identical (the _sq_dist contract)."""
     emb = _t(spark, sf_dir, "embeddings")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10).cast("bigint")
-        % 100
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
-    )
-    dbl = emb.select(split.alias("split"), as_double_array("embedding").alias("emb"))
+    dbl = emb.select(hash_split("vec_id").alias("split"), as_double_array("embedding").alias("emb"))
     counts = dbl.groupBy("split").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     cent = decimal_mean_centroids(dbl, "split").join(counts, "split")
     a = cent.alias("a")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from .ranking import two_level_rank
+from .ranking import ecdf_peak, rank_sum, two_sample_grid
 from ..sources.loader import scan_wide, wide_docs
 from ..session import cached
 
@@ -50,6 +50,18 @@ def hash_split(id_col: str = "doc_id", train: int = 80, validation: int = 10) ->
         F.when(bucket < train, "train")
         .when(bucket < train + validation, "validation")
         .otherwise("test")
+    )
+
+
+def _train_vs_validation(docs: DataFrame) -> DataFrame:
+    """(v, is_a): each train document's n_chars as sample A and each
+    validation document's as sample B, cut at hash_split's 80/90
+    md5 buckets — the two-sample label of x_ks_drift and x_mann_whitney."""
+    bucket = md5_bucket("doc_id")
+    return (
+        docs.select(F.col("n_chars").alias("v"), bucket.alias("bucket"))
+        .filter(F.col("bucket") < 90)
+        .select("v", F.when(F.col("bucket") < 80, 1).otherwise(0).alias("is_a"))
     )
 
 
@@ -592,15 +604,7 @@ def x_corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("max_cnt") * 10 <= F.col("n_tok") * 3)
         & (F.col("n_dup") * 5 <= F.greatest(F.col("n_bi"), F.lit(0)))
     ).select("doc_id", "lang", "n_tok")
-    bucket = md5_bucket("doc_id")
-    s = q.select(
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "validation")
-        .otherwise("test")
-        .alias("split"),
-        "lang",
-        "n_tok",
-    )
+    s = q.select(hash_split("doc_id").alias("split"), "lang", "n_tok")
     return (
         s.groupBy("split", "lang")
         .agg(
@@ -1346,52 +1350,11 @@ def x_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     split guarantees) KS ~ sqrt((na+nb)/(na*nb)) — a split bug or a
     biased ingest shows up as a KS far above that. Every CDF value is
     an exact rational of integer cumulative counts, so the statistic is
-    bit-identical cross-engine and value-hash-checked.
-
-    100 TB design: one partial-aggregable count per (value, split) —
-    the shuffle carries distinct values, not rows — then BOTH split
-    cumulatives ride one two_level_rank pass over the value grid
-    (boundary-literal buckets, partitioned per-bucket prefix sums —
-    the grid grows with distinct values, so it must not single-task
-    sort) and a TakeOrderedAndProject(1). For continuous doubles at
-    scale the same plan runs over quantile-bucketed values
-    (x_quantile_sample's sampled order statistics).
-    """
+    bit-identical cross-engine and value-hash-checked. Plan shape:
+    ranking.two_sample_grid."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = md5_bucket("doc_id")
-    lab = (
-        docs.select(F.col("n_chars").alias("v"), bucket.alias("bucket"))
-        .filter(F.col("bucket") < 90)
-        .select("v", F.when(F.col("bucket") < 80, 1).otherwise(0).alias("is_a"))
-    )
-    per_v = lab.groupBy("v").agg(
-        F.sum("is_a").cast("bigint").alias("ca"),
-        F.sum(1 - F.col("is_a")).cast("bigint").alias("cb"),
-    )
-    # inclusive ECDF counts = two_level exclusive prefix + own weight:
-    # both split cumulatives ride ONE bucketed pass (round-12 retirement
-    # of the unpartitioned cumulative window over the value grid), and
-    # the grand totals ride the helper's bucket-totals frame
-    cum = two_level_rank(
-        per_v, ["v"], weight=["ca", "cb"], out_col=["exc_a", "exc_b"],
-        total_col=["na", "nb"],
-    ).select(
-        "v",
-        (F.col("exc_a") + F.col("ca")).cast("bigint").alias("cum_a"),
-        (F.col("exc_b") + F.col("cb")).cast("bigint").alias("cum_b"),
-        "na",
-        "nb",
-    )
-    d = F.abs(
-        F.col("cum_a").cast("double") / F.col("na")
-        - F.col("cum_b").cast("double") / F.col("nb")
-    )
-    return (
-        cum
-        .select("na", "nb", F.round(d, 6).alias("ks_stat"), F.col("v").cast("bigint").alias("ks_at"), d.alias("_d"))
-        .orderBy(F.desc("_d"), F.asc("ks_at"))
-        .limit(1)
-        .drop("_d")
+    return ecdf_peak(two_sample_grid(_train_vs_validation(docs))).select(
+        "na", "nb", F.round("d", 6).alias("ks_stat"), F.col("v").cast("bigint").alias("ks_at")
     )
 
 
@@ -1741,63 +1704,16 @@ def x_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash splits of the document-length distribution — the
     NONPARAMETRIC location-shift gate next to x_ks_drift's max-gap
     statistic (U is sensitive to median shift, KS to any shape
-    change; a healthy md5 split should pass both, |z| < ~2). Tie
-    handling is exact: ranks never materialize per row — on the
-    grouped value frame the doubled average rank of a tie group is the
-    integer 2·cumprev + c + 1, so the doubled rank sum, U·2, and the
-    tie-correction term Σ(c³−c) are all exact bigints; the z-score is
-    one fixed sqrt/division tree at the end.
-
-    100 TB design: one partial-aggregable groupBy collapses the corpus
-    to |distinct values| rows; the tie-group prefix is a two_level_rank
-    over that grid (it grows with distinct values — no single-task
-    sort); the statistic reduces to ONE row map-side. Same shape as
-    x_ks_drift, sharing its split convention.
+    change; a healthy md5 split should pass both, |z| < ~2). Ties are
+    exact and ranks never materialize per row: U·2 and the tie term are
+    exact bigints, z one sqrt/division tree (ranking.rank_sum). Plan
+    shape: ranking.two_sample_grid, over x_ks_drift's split.
 
     Reference parity: no statistics surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline-monitoring family."""
-    docs = wide_docs(spark, sf_dir).select("doc_id", "n_chars")
-    bucket = md5_bucket("doc_id")
-    lab = docs.select(
-        F.col("n_chars").alias("v"), bucket.alias("bucket")
-    ).filter(F.col("bucket") < 90).select(
-        "v", F.when(F.col("bucket") < 80, 1).otherwise(0).alias("is_a")
-    )
-    per_v = lab.groupBy("v").agg(
-        F.sum("is_a").cast("bigint").alias("ca"),
-        F.sum(1 - F.col("is_a")).cast("bigint").alias("cb"),
-        F.count(F.lit(1)).cast("bigint").alias("c"),
-    )
-    # exclusive prefix of the tie-group sizes via two_level_rank — the
-    # round-12 retirement of the unpartitioned cumulative window over
-    # the distinct-value grid
-    cum = two_level_rank(per_v, ["v"], weight="c", out_col="cumprev").select(
-        "ca", "cb", "c", "cumprev"
-    )
-    s = cum.agg(
-        F.sum("ca").cast("bigint").alias("na"),
-        F.sum("cb").cast("bigint").alias("nb"),
-        F.sum(F.col("ca") * (2 * F.col("cumprev") + F.col("c") + 1))
-        .cast("bigint")
-        .alias("r1x2"),
-        F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c"))
-        .cast("bigint")
-        .alias("ties"),
-    )
-    u1x2 = F.col("r1x2") - F.col("na") * (F.col("na") + 1)
-    nad, nbd = F.col("na").cast("double"), F.col("nb").cast("double")
-    nn = nad + nbd
-    sigma = F.sqrt(
-        (nad * nbd / 12.0)
-        * ((nn + 1.0) - F.col("ties").cast("double") / (nn * (nn - 1.0)))
-    )
-    return s.select(
-        "na",
-        "nb",
-        u1x2.cast("bigint").alias("u1_x2"),
-        F.round(
-            (u1x2.cast("double") - nad * nbd) / (2.0 * sigma), 6
-        ).alias("z"),
+    docs = wide_docs(spark, sf_dir)
+    return rank_sum(two_sample_grid(_train_vs_validation(docs))).select(
+        "na", "nb", "u1_x2", F.round("z", 6).alias("z")
     )
 
 

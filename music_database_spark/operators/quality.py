@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..plans.relational import _t
 from ..registry import register
 from ..sources.loader import scan_wide
-from .ranking import two_level_rank
+from .ranking import ecdf_peak, rank_sum, two_level_rank, two_sample_grid
 from ..session import cached
 from .pipeline import md5_bucket
 
@@ -1737,16 +1737,9 @@ def x_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks probability faithfulness, AUC sweeps every threshold at
     once; 0.5 = coin flip).
 
-    Determinism: per-value tie groups carry the doubled midrank
-    2*cumprev+c+1 (the x_mann_whitney trick — AUC IS U/n1n0), so the
-    numerator is an exact integer and the single division is the only
-    float op. No per-row ranks ever materialize.
-
-    100 TB design: one partial-aggregable groupBy collapses documents
-    to |distinct scores| rows; the tie-group prefix is a two_level_rank
-    over that collapsed frame (score cardinality still grows with the
-    data — no single-task sort) and the statistic reduces map-side to
-    ONE row.
+    Determinism: AUC IS U/(n1·n0), so it is ranking.rank_sum over the
+    two-sample grid with the positives as sample A: an exact integer
+    numerator and one division. Plan shape: ranking.two_sample_grid.
 
     Reference parity: 'top rated' ordering quality (Queries:28-44)
     measured properly; SURVEY.md §2 EXT eval family."""
@@ -1757,36 +1750,9 @@ def x_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stop_list, t)))
     pos = F.when(hits * 100 >= F.size(toks) * KAPPA_STOP_PCT, 1).otherwise(0)
-    per_v = (
-        docs.select(F.col("n_chars").alias("v"), pos.alias("pos"))
-        .groupBy("v")
-        .agg(
-            F.sum("pos").cast("bigint").alias("cp"),
-            F.sum(1 - F.col("pos")).cast("bigint").alias("cn"),
-            F.count(F.lit(1)).cast("bigint").alias("c"),
-        )
-    )
-    # exclusive prefix of tie-group sizes via two_level_rank — the
-    # round-12 retirement of the unpartitioned cumulative window over
-    # the distinct-score grid
-    cum = two_level_rank(per_v, ["v"], weight="c", out_col="cumprev").select(
-        "cp", "cn", "c", "cumprev"
-    )
-    s = cum.agg(
-        F.sum("cp").cast("bigint").alias("n1"),
-        F.sum("cn").cast("bigint").alias("n0"),
-        F.sum(F.col("cp") * (2 * F.col("cumprev") + F.col("c") + 1))
-        .cast("bigint")
-        .alias("r1x2"),
-    )
-    return s.select(
-        F.col("n1").alias("n_pos"),
-        F.col("n0").alias("n_neg"),
-        F.round(
-            (F.col("r1x2") - F.col("n1") * (F.col("n1") + 1)).cast("double")
-            / (2.0 * F.col("n1").cast("double") * F.col("n0").cast("double")),
-            6,
-        ).alias("auc"),
+    lab = docs.select(F.col("n_chars").alias("v"), pos.alias("is_a"))
+    return rank_sum(two_sample_grid(lab)).select(
+        F.col("na").alias("n_pos"), F.col("nb").alias("n_neg"), F.round("auc", 6).alias("auc")
     )
 
 
@@ -2064,60 +2030,22 @@ def x_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference distribution (completes the nonparametric family next to
     x_mann_whitney's rank test and x_chi2_independence).
 
-    Determinism: prices become exact integer cents; per-value counts
-    are bigints accumulated by an explicitly ordered cumulative window
-    (the order-dependent-fold recipe); each ECDF term is one int/int
-    double division and D is a max over exact doubles — identical trees
-    both engines, rounded to 6.
-
-    100 TB design: one join + one value-keyed partial agg compresses
-    the stream to its distinct-value grid BEFORE the window; the
-    two_level_rank prefix pass then runs partition-parallel over
-    |grid| rows, not |orders| — at TPC-H price spreads the "grid" is
-    nearly one row per order, so it must never single-task sort
-    (round-12 retirement of the lint-sheltered cumulative window)."""
+    Determinism: prices become exact integer cents; D is
+    ranking.ecdf_peak's gap, an exact double rounded to 6. Plan shape:
+    ranking.two_sample_grid."""
     orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    v = (
+    lab = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .filter(F.col("c_mktsegment").isin(KS_SEG_A, KS_SEG_B))
         .select(
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("bigint")
-            .alias("cents"),
+            (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").alias("v"),
             F.when(F.col("c_mktsegment") == KS_SEG_A, 1).otherwise(0).alias("is_a"),
         )
     )
-    steps = cached(
-        v.groupBy("cents").agg(
-            F.sum(F.col("is_a").cast("bigint")).cast("bigint").alias("a_here"),
-            F.sum((1 - F.col("is_a")).cast("bigint")).cast("bigint").alias("b_here"),
-        )
+    return ecdf_peak(two_sample_grid(lab)).select(
+        F.col("na").alias("n_a"), F.col("nb").alias("n_b"), F.round("d", 6).alias("ks_stat")
     )
-    # inclusive ECDF counts = two_level exclusive prefix + own weight;
-    # both split cumulatives share one bucketed pass (round-12
-    # retirement of the unpartitioned cumulative window; at TPC-H
-    # price spreads the grid is nearly one row per order), and the
-    # grand totals ride the helper's <=nb-row bucket-totals frame
-    # instead of a second scan of the grid
-    ecdf = two_level_rank(
-        steps, ["cents"], weight=["a_here", "b_here"],
-        out_col=["exc_a", "exc_b"], total_col=["n_a", "n_b"], persist=False,
-    ).select(
-        (F.col("exc_a") + F.col("a_here")).cast("bigint").alias("cum_a"),
-        (F.col("exc_b") + F.col("b_here")).cast("bigint").alias("cum_b"),
-        "n_a",
-        "n_b",
-    )
-    d = ecdf.select(
-        "n_a",
-        "n_b",
-        F.abs(
-            F.col("cum_a").cast("double") / F.col("n_a")
-            - F.col("cum_b").cast("double") / F.col("n_b")
-        ).alias("gap"),
-    )
-    return d.groupBy("n_a", "n_b").agg(F.round(F.max("gap"), 6).alias("ks_stat"))
 
 
 T_CLOSE_BUCKETS = (0, 2500, 5000, 7500)  # acctbal bucket lower edges (ordered)

@@ -442,3 +442,22 @@ def test_corpus_pipeline_is_a_facade():
         src = src.replace(seg, "")
     found = [t for t in ("groupBy(", ".over(", "Window", ".join(", "crossJoin(") if t in src]
     assert not found, f"plan logic in corpus.py: {found}"
+
+
+TWO_SAMPLE_QUERIES = ("x_ks_test", "x_ks_drift", "x_mann_whitney", "x_auc_roc")
+
+
+def test_two_sample_statistics_share_one_spine():
+    """The four two-sample statistics build no value grid of their own:
+    each keeps its scan, its A/B label and its output columns, and gets
+    the per-value counts and prefix sums from ranking.two_sample_grid."""
+    import inspect
+
+    from music_database_spark.registry import load_all
+
+    specs = load_all()
+    for name in TWO_SAMPLE_QUERIES:
+        src = inspect.getsource(specs[name].build)
+        assert "two_sample_grid(" in src, name
+        found = [t for t in ("two_level_rank(", "groupBy(") if t in src]
+        assert not found, f"{name} builds its own grid: {found}"
